@@ -14,7 +14,7 @@ import graft.functions.VectorExprs.{ArrayDot, LshBuckets}
 
 /** Catalyst extension entry point (`spark.sql.extensions=graft.GraftExtensions`).
   *
-  * Four injections:
+  * Three injections:
   *
   *  1. The engine's custom codegen expressions as session functions —
   *     unlike `createOrReplaceTempFunction` (per-session-state, lost on
@@ -34,12 +34,7 @@ import graft.functions.VectorExprs.{ArrayDot, LshBuckets}
   *     broadcast cross join against a tiny frame (the engine's own
   *     ANN query-vector pattern) is bounded by definition.
   *
-  *  3. An opt-in optimizer rule (`spark.graft.manifestPruning=true`)
-  *     that prunes parquet scans to the files whose manifest min/max
-  *     ranges can satisfy the query's range predicates —
-  *     [[graft.plans.ManifestPruneRule]].
-  *
-  *  4. Its snapshot-table sibling (`spark.graft.snapshotPruning=true`):
+  *  3. An opt-in optimizer rule (`spark.graft.snapshotPruning=true`):
   *     filtered `Snapshots.read` plans skip files by the per-file
   *     stats recorded in the commit manifests —
   *     [[graft.plans.SnapshotPruneRule]].
@@ -56,13 +51,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       if (session.conf.get("spark.graft.failOnCartesian", "false").toBoolean)
         GraftExtensions.assertNoCartesian(plan)
     }
-    // 3. Opt-in manifest-driven file pruning
-    //    (spark.graft.manifestPruning=true): Filter(range-pred) over a
-    //    manifested parquet dir reads only the files whose min/max can
-    //    overlap — see graft.plans.ManifestPruneRule.
-    ext.injectOptimizerRule(session =>
-      graft.plans.ManifestPruneRule(session))
-    // 4. Opt-in snapshot-manifest file pruning
+    // 3. Opt-in snapshot-manifest file pruning
     //    (spark.graft.snapshotPruning=true): Filter(range-pred) over a
     //    Snapshots.read() file list skips files by the per-file stats
     //    recorded at commit time — see graft.plans.SnapshotPruneRule.

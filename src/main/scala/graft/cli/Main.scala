@@ -3,7 +3,6 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 
 import graft.{GraftSession, SparkEntry, Tables}
-import graft.maintain.Compaction
 import graft.queries.ProfileQueries
 import graft.sources.{JsonApi, ParquetSink}
 
@@ -14,8 +13,8 @@ import graft.sources.{JsonApi, ParquetSink}
   *   query   SFDIR NAME...        run registered queries, print results
   *   sql     SFDIR "SELECT ..."   ad-hoc SQL over the registered views
   *   profile SFDIR TABLE          one-pass column profile
-  *   optimize PATH [N]            compact a table to N files (default 8)
-  *   vacuum  ROOT                 sweep swap leftovers (maintain.Vacuum)
+  *   optimize TABLE [N]           compact a snapshot table to N files
+  *   vacuum  ROOT                 sweep crashed snapshot commits
   *   bench                        delegate to graft.Bench
   *
   * Errors per docket never abort the run (PERMISSIVE parse + corrupt
@@ -36,7 +35,15 @@ object Main {
 
   private def usage(): Unit =
     System.err.println(
-      """usage: graft.cli.Main <convert|query|sql|lint|profile|optimize|manifest|vacuum|curate|dedup-incremental|index-build|index-probe|decontaminate|decontaminate-spans|cap-source|pq-encode|dedup-lines|dedup-spans|semdedup|novelty|sketch-build|sketch-query|dense-index|snapshot|bench> ...
+      """usage: graft.cli.Main <convert|query|sql|lint|profile|optimize|manifest|
+        |         snapshot|vacuum|curate|dedup-incremental|index-build|
+        |         index-probe|index-append|bm25-index|dense-index|bm25-search|
+        |         ann-index|index-compact|ann-search|hybrid-search|
+        |         decontaminate-spans|cap-source|pq-encode|containment-dedup|
+        |         dedup-spans-intradoc|winnow-pairs|gopher-filter|phash-dedup|
+        |         nb-filter|dsir-select|semantic-decon|jl-project|decontaminate|
+        |         dedup-lines|dedup-spans|semdedup|novelty|sketch-build|
+        |         sketch-query|bench> ...
         |  convert DATA [--output-path P] [--agency A] [--compression C]
         |         [--snapshot [--stats c1,c2]]   each run lands as one
         |         atomic version; re-runs over grown input append only
@@ -47,8 +54,11 @@ object Main {
         |  sql SFDIR "SELECT ..."
         |  lint SFDIR <NAME|"SELECT ...">   plan audit, exit 1 on Error
         |  profile SFDIR TABLE [--approx]
-        |  optimize PATH [N] [--zorder colA,colB]
-        |  manifest PATH col1[,col2...]   build file-level min/max manifest
+        |  optimize TABLE [N] [--zorder colA,colB]   compact a snapshot
+        |         table's head into N files (default 8) as a new version;
+        |         --zorder z-clusters it and records colA,colB stats
+        |  manifest TABLE col1[,col2...]   range-cluster a snapshot
+        |         table's head and record per-file min/max on the columns
         |  snapshot TABLE <create|append|overwrite> SRC [--stats c1,c2]
         |           [--bloom c1,c2]   (--bloom: per-file key-membership
         |           sketches — key deletes/reads skip files on
@@ -76,7 +86,9 @@ object Main {
         |           whose C-stat range the updates touch)
         |         snapshot-isolated commits + time travel (atomic
         |         rename-claimed manifests over immutable batches)
-        |  vacuum ROOT
+        |  vacuum ROOT   sweep crashed commits' leftovers (unreferenced
+        |         data batches, unclaimed manifests) from every snapshot
+        |         table directly under ROOT; drops no version
         |  curate IN OUT [--min-quality Q] [--near-jaccard J]
         |         [--min-chars N] [--langs en,de] [--compression C]
         |  dedup-incremental IN REF OUT [--min-jaccard J] [--compression C]
@@ -317,28 +329,27 @@ object Main {
         profiled.show(100, truncate = false)
 
       case "optimize" =>
-        // optimize PATH [N] [--zorder colA,colB]
+        // optimize TABLE [N] [--zorder colA,colB] — compact a snapshot
+        // table's head into N files as a new version
+        import graft.maintain.Snapshots
         val n = args.drop(2).find(a => a.forall(_.isDigit)).map(_.toInt)
           .getOrElse(8)
-        arg(args, "--zorder") match {
+        val v = arg(args, "--zorder") match {
           case Some(zcols) =>
             val Array(a, b) = zcols.split(',')
-            graft.maintain.Layout.rewriteZOrdered(spark, args(1), a, b, n)
-            println(s"z-ordered ${args(1)} by ($a, $b) into $n files")
-          case None =>
-            val r = Compaction.compact(spark, args(1), n)
-            println(s"files: ${r.before.files} -> ${r.after.files} " +
-              f"(${r.reduction * 100}%.1f%% reduction), bytes: ${r.after.bytes}")
+            Snapshots.compactZOrdered(spark, args(1), a, b, n)
+          case None => Snapshots.compact(spark, args(1), n)
         }
+        println(s"optimized ${args(1)} into $n files as v$v")
 
       case "manifest" =>
-        // manifest PATH col1[,col2...] — build/refresh the file-level
-        // min/max manifest for metadata-only file pruning
+        // manifest TABLE col1[,col2...] — range-cluster a snapshot
+        // table's head on the columns and record their per-file
+        // min/max in the new version's manifest
         val cols = args(2).split(',').toSeq
-        graft.maintain.Manifest.build(spark, args(1), cols)
-        val m = graft.maintain.Manifest.read(spark, args(1))
-        println(s"manifest built: ${m.count()} files, " +
-          s"columns=${cols.mkString(",")}")
+        val v = graft.maintain.Snapshots.compactClustered(
+          spark, args(1), cols)
+        println(s"manifest stats on ${cols.mkString(",")} as v$v")
 
       case "snapshot" =>
         // snapshot TABLE <create SRC | append SRC | overwrite SRC |
@@ -658,14 +669,20 @@ object Main {
         }
 
       case "vacuum" =>
-        // vacuum ROOT — sweep swap leftovers across a warehouse root
-        val r = graft.maintain.Vacuum.vacuum(spark, args(1))
-        println(s"removed tmp: ${r.removedTmp.size} " +
-          s"(${r.removedTmp.mkString(", ")})")
-        println(s"recovered tables: ${r.recoveredTables.size} " +
-          s"(${r.recoveredTables.mkString(", ")})")
-        println(s"cleared stale backups: ${r.clearedBackups.size} " +
-          s"(${r.clearedBackups.mkString(", ")})")
+        // vacuum ROOT — sweep what crashed commits left (data batches
+        // no version references, unclaimed manifests) from every
+        // snapshot table directly under ROOT; no version is dropped
+        import graft.maintain.Snapshots
+        val root = new org.apache.hadoop.fs.Path(args(1))
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(root).filter(_.isDirectory).map(_.getPath.toString)
+          .sorted.foreach { t =>
+            val vs = Snapshots.versions(spark, t)
+            if (vs.nonEmpty) {
+              val (_, swept) = Snapshots.expire(spark, t, keepLast = vs.size)
+              println(s"$t: swept $swept orphan batches")
+            }
+          }
 
       case "curate" =>
         // curate IN OUT [--min-quality Q] [--near-jaccard J]

@@ -74,19 +74,4 @@ object Chunking {
         (if (keepTokens) Seq(col("__graft_chunk").as("chunk_tokens"))
          else Seq.empty): _*)
   }
-
-  /** Chunk inventory per document: `(idCol, n_chunks, total_chunk_
-    * tokens)` — the duplication-factor audit a pipeline checks before
-    * materializing chunks. */
-  def chunkStats(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      chunkSize: Int = 64,
-      overlap: Int = 16): DataFrame =
-    chunk(docs, textCol = textCol, chunkSize = chunkSize, overlap = overlap)
-      .groupBy(idCol)
-      .agg(
-        count(lit(1)).as("n_chunks"),
-        sum(col("n_chunk_tokens")).as("total_chunk_tokens"))
 }

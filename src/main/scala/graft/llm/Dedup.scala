@@ -137,13 +137,6 @@ object Dedup {
 
   // ---- MinHash + LSH ------------------------------------------------
 
-  /** H-permutation MinHash signature of a shingle array. Permutation i
-    * is simulated by seeding xxhash64 with i (standard single-hash
-    * MinHash variant). */
-  def minhashSignature(shingleCol: Column, numHashes: Int = 32): Column =
-    array((0 until numHashes).map(i =>
-      array_min(transform(shingleCol, sh => xxhash64(lit(i), sh)))): _*)
-
   /** Near-duplicate pairs via banded LSH over MinHash signatures.
     *
     * numHashes = bands * rowsPerBand. Two docs collide in a band iff

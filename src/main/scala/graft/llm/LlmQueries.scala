@@ -969,6 +969,14 @@ object LlmQueries {
                            c -> CAST(ascii(c) AS BIGINT))),
           (acc, x) -> (acc * 131 + x) % 2147483647)"""
 
+  /** `Retrieval.hashEmbed`'s 16-dim hashed term-count vector in DuckDB
+    * SQL, over a token-list expression — shared by the hybrid and MMR
+    * oracles. */
+  private def duckdbHashVec(toksExpr: String): String =
+    s"""[CAST(len(list_filter([${duckdbTextHash("tok")} % 16
+               for tok in $toksExpr], h -> h = j)) AS DOUBLE)
+             for j in range(0, 16)]"""
+
   /** Deterministic id-hash train/val/test split (80/10/10): stable
     * across runs and partitionings, so no document ever migrates
     * between train and test on re-processing. */
@@ -2574,10 +2582,6 @@ object LlmQueries {
   }
 
   private val hybridOracleSql: String = {
-    def hashVec(toksExpr: String): String =
-      s"""[CAST(len(list_filter([${duckdbTextHash("tok")} % 16
-             for tok in $toksExpr], h -> h = j)) AS DOUBLE)
-           for j in range(0, 16)]"""
     s"""WITH qs AS (SELECT * FROM (VALUES (0, 'hash join merge'),
                       (1, 'filter scan index'))
                     AS t(query_id, query_text)),
@@ -2620,9 +2624,9 @@ object LlmQueries {
                                 ORDER BY bm25 DESC, doc_id) AS rk
                        FROM lex)
                  WHERE rk <= 20),
-        dv AS (SELECT doc_id, ${hashVec("toks")} AS v FROM dd),
+        dv AS (SELECT doc_id, ${duckdbHashVec("toks")} AS v FROM dd),
         qv AS (SELECT query_id,
-                      ${hashVec(
+                      ${duckdbHashVec(
                         """string_split_regex(
                              trim(lower(query_text)), '\s+')""")} AS q
                FROM qs),
@@ -2729,17 +2733,13 @@ object LlmQueries {
       Retrieval.mmrDiversify(cands, k = 5, lambda = 0.7)
     },
     Some {
-      def hashVec(toksExpr: String): String =
-        s"""[CAST(len(list_filter([${duckdbTextHash("tok")} % 16
-               for tok in $toksExpr], h -> h = j)) AS DOUBLE)
-             for j in range(0, 16)]"""
       s"""WITH RECURSIVE
           bl AS (SELECT doc_id,
                         string_split_regex(trim(lower(coalesce(text, ''))),
                           '\\s+') AS toks
                  FROM documents),
-          dv AS (SELECT doc_id, ${hashVec("toks")} AS v FROM bl),
-          qv AS (SELECT ${hashVec(
+          dv AS (SELECT doc_id, ${duckdbHashVec("toks")} AS v FROM bl),
+          qv AS (SELECT ${duckdbHashVec(
                    """string_split_regex(
                         trim(lower('hash join merge')), '\s+')""")} AS q),
           cand AS (SELECT doc_id, v, rel FROM (
@@ -2809,10 +2809,6 @@ object LlmQueries {
         maxCandidates = 15)
     },
     Some {
-      def hashVec(toksExpr: String): String =
-        s"""[CAST(len(list_filter([${duckdbTextHash("tok")} % 16
-               for tok in $toksExpr], h -> h = j)) AS DOUBLE)
-             for j in range(0, 16)]"""
       s"""WITH RECURSIVE
           qs AS (SELECT 0 AS query_id, 'hash join merge' AS query_text),
           bl AS (SELECT doc_id,
@@ -2854,9 +2850,9 @@ object LlmQueries {
                                   ORDER BY bm25 DESC, doc_id) AS rk
                          FROM lex)
                    WHERE rk <= 20),
-          dv AS (SELECT doc_id, ${hashVec("toks")} AS v FROM dd),
+          dv AS (SELECT doc_id, ${duckdbHashVec("toks")} AS v FROM dd),
           qv AS (SELECT query_id,
-                        ${hashVec(
+                        ${duckdbHashVec(
                           """string_split_regex(
                                trim(lower(query_text)), '\s+')""")} AS q
                  FROM qs),

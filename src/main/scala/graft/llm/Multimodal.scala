@@ -180,12 +180,6 @@ object Multimodal {
     }
   }
 
-  /** Former name of [[decode]], kept while the decode was a stub. */
-  @deprecated("use decode", "0.1")
-  def decodeStub(media: Dataset[MediaRow], featureDim: Int = 8)(
-      implicit spark: SparkSession): Dataset[DecodedMedia] =
-    decode(media, featureDim)
-
   final case class ResizedImage(
       media_id: Long,
       orig_width: Int,

@@ -15,11 +15,12 @@ import org.apache.spark.sql.functions._
   * expressed with plain Spark: quantile-bucket ranks → bit interleave →
   * repartitionByRange + sortWithinPartitions on the derived key.
   *
-  * Scale: the default write/rewrite path ranks via approxQuantile
-  * cutpoints ([[zKeyApprox]]) — one stats pass plus one range exchange
-  * on the z-key, no global ordering stage anywhere — so `optimize
-  * --zorder` is safe to point at a 100 TB table (still best run per
-  * partition, e.g. per day, to bound the rewrite's blast radius).
+  * Scale: the default write path ranks via approxQuantile cutpoints
+  * ([[zKeyApprox]]) — one stats pass plus one range exchange on the
+  * z-key, no global ordering stage anywhere — so `optimize --zorder`
+  * ([[Snapshots.compactZOrdered]]) is safe to point at a 100 TB table
+  * (still best run per partition, e.g. per day, to bound the
+  * rewrite's blast radius).
   */
 object Layout {
 
@@ -108,27 +109,5 @@ object Layout {
     // shared 16-bit interleave covers them)
     df.withColumn("__graft_z",
       interleave(bucket(allCuts(0), colA), bucket(allCuts(1), colB)))
-  }
-
-  /** In-place z-order rewrite of a parquet path, with the same
-    * crash-safe temp-swap as Compaction.compact (Spark cannot
-    * overwrite its own input; readers see old or new, never halves). */
-  def rewriteZOrdered(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      colA: String,
-      colB: String,
-      nFiles: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val f = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(path.stripSuffix("/") + "_prezorder")
-    Swap.recover(f, new Path(path), old)
-    // capture manifest columns BEFORE the swap (see Manifest scaladoc)
-    val manifestCols = Manifest.columnsIfPresent(spark, path)
-    val tmp = path.stripSuffix("/") + "_zordering"
-    writeZOrdered(spark.read.parquet(path), tmp, colA, colB, nFiles)
-    Swap.replace(f, new Path(path), new Path(tmp), old)
-    manifestCols.foreach(cols => Manifest.build(spark, path, cols))
   }
 }

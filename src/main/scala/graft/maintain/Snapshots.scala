@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType,
   * connected — `iceberg_exploration.py:65-80,165-186`). At 100 TB a
   * real deployment wants exactly three properties from the format
   * layer, and this module provides them on raw Hadoop-FS + parquet
-  * primitives, consistent with the repo's Manifest/Swap/Segments
-  * stack:
+  * primitives (the serving indexes keep their own [[Segments]]
+  * layout):
   *
   *   1. '''Atomic commits''': writers never mutate data in place —
   *      every commit writes its rows into a fresh immutable
@@ -1249,7 +1249,7 @@ object Snapshots {
       .format(classOf[graft.streaming.SnapshotSourceProvider].getName)
       .option("path", path)
       .option("startingVersion", fromVersion.toString)
-      .option("tolerateCompaction", tolerateCompaction.toString)
+      .option("tolerateCompaction", s"$tolerateCompaction")
       .option("maxVersionsPerBatch", maxVersionsPerBatch.toString)
       .load()
 
@@ -1562,9 +1562,8 @@ object Snapshots {
     * updates) committed as a new version (operation "upsert") — the
     * time-travelable MERGE: every pre-merge state stays readable, a
     * bad upsert is one `rollback` away, and a reader racing the merge
-    * sees old-or-new (snapshot isolation doing [[Upsert.upsertPath]]'s
-    * swap work). Cost: one hash shuffle on the key over head ∪
-    * updates + a FULL-TABLE rewrite — at 100 TB use
+    * sees old-or-new (snapshot isolation). Cost: one hash shuffle on
+    * the key over head ∪ updates + a FULL-TABLE rewrite — at 100 TB use
     * [[commitUpsertScoped]], which rewrites only the files whose
     * recorded scope-stat range the updates touch. */
   def commitUpsert(
@@ -2005,7 +2004,7 @@ object Snapshots {
     * new version (operation "compact"). Nothing is deleted — prior
     * versions still read their original files until [[expire]]; a
     * reader racing the compaction sees old-or-new, never a mix (the
-    * snapshot-isolation property doing the Swap protocol's job). */
+    * snapshot-isolation property). */
   def compact(spark: SparkSession, path: String,
       targetFiles: Int = 8): Long = {
     require(targetFiles >= 1, s"targetFiles must be ≥ 1: $targetFiles")
@@ -2072,11 +2071,13 @@ object Snapshots {
 
   /** Retire all but the newest `keepLast` versions: their manifests
     * are deleted, then every `data/batch-*` directory no RETAINED
-    * version references is removed. Retention-window contract: do not
-    * expire versions a long-running reader may still be pinned to
-    * (readers resolve files at plan time; standard table-format
-    * operations guidance). Returns (versions dropped, data dirs
-    * deleted). */
+    * version references is removed, and so is any unclaimed manifest
+    * a crashed commit left; `keepLast` = every version (the CLI
+    * `vacuum`) sweeps only those crash leftovers. Retention-window
+    * contract: do not expire versions a long-running reader may
+    * still be pinned to (readers resolve files at plan time; standard
+    * table-format operations guidance). Returns (versions dropped,
+    * data dirs deleted). */
   def expire(spark: SparkSession, path: String,
       keepLast: Int = 2,
       orphanMinAgeMs: Long = 3600000L,
@@ -2133,6 +2134,12 @@ object Snapshots {
           !referenced.contains(st.getPath.toString) &&
           st.getModificationTime <= cutoff)
     orphans.foreach(st => f.delete(st.getPath, true))
+    // a commit that crashed between its manifest write and the claim
+    // leaves a `.tmp-v*` manifest no listing reads; same age floor
+    f.listStatus(new Path(s"$path/$SnapDir")).toSeq
+      .filter(st => st.getPath.getName.startsWith(".tmp-v") &&
+        st.getModificationTime <= cutoff)
+      .foreach(st => f.delete(st.getPath, true))
     (drop.size, orphans.size)
   }
 }

@@ -2,8 +2,11 @@ package graft.maintain
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe in-place table replacement, shared by Compaction.compact,
-  * Upsert.upsertPath and Layout.rewriteZOrdered.
+/** Crash-safe in-place directory replacement for the segmented
+  * serving indexes ([[Segments.replaceTable]], the `index-compact`
+  * arm; [[Segments.writeSegment]] heals an interrupted one first).
+  * Snapshot tables need none of this: their commits are one atomic
+  * manifest rename over immutable batches ([[Snapshots]]).
   *
   * The swap is two renames: `path` → `backup`, then `tmp` → `path`,
   * then delete `backup`. Two hazards the naive version ignores:

@@ -1,14 +1,14 @@
 package graft.maintain
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Keyed upsert (MERGE-like latest-wins) for plain-parquet tables —
-  * the lakehouse primitive the reference's Iceberg ambition implies
-  * but never implements (its delta simulation only appends,
-  * simple_iceberg_exploration.py:188-247).
+/** Keyed upsert (MERGE-like latest-wins) semantics, committed by
+  * [[Snapshots.commitUpsert]], [[Snapshots.commitUpsertScoped]] and
+  * the CDC sink `Incremental.upsertStream` — the lakehouse primitive
+  * the reference's Iceberg ambition implies but never implements (its
+  * delta simulation only appends, simple_iceberg_exploration.py:188-247).
   *
   * Semantics: rows from `updates` replace target rows with the same
   * key; among several candidates for one key the highest `versionCol`
@@ -18,9 +18,8 @@ import org.apache.spark.sql.functions._
   * MATCHED INSERT, expressed as one union + one windowed shuffle on
   * the key.
   *
-  * Scale: ONE hash shuffle on the key (the window), no join. With a
-  * partitioned table, filter both sides to the touched partitions
-  * first (dynamic partition overwrite then replaces only those) —
+  * Scale: ONE hash shuffle on the key (the window), no join. Feed it
+  * only the touched files ([[Snapshots.commitUpsertScoped]]) —
   * upserting 1k keys into a 100 TB table must not rewrite the table.
   */
 object Upsert {
@@ -39,38 +38,5 @@ object Upsert {
       .withColumn("__graft_rn", row_number().over(w))
       .filter(col("__graft_rn") === 1)
       .drop("__graft_rn")
-  }
-
-  /** Backup-dir path used by upsertPath's swap; streaming callers
-    * probe it to distinguish "table never created" from "table lost
-    * mid-swap" (see Incremental.upsertStream). */
-  def backupPath(path: String): Path =
-    new Path(path.stripSuffix("/") + "_preupsert")
-
-  /** Apply a merge to a parquet path with the crash-safe temp-swap of
-    * [[Swap]]: write the merged table to a sibling dir, swap into
-    * place with checked renames — readers never see half a table,
-    * Spark never overwrites its own input, and an interrupted prior
-    * upsert is healed before the table is read. Returns (rows before,
-    * rows after). */
-  def upsertPath(
-      spark: SparkSession,
-      path: String,
-      updates: DataFrame,
-      keyCols: Seq[String],
-      versionCol: String,
-      tiebreakCol: String): (Long, Long) = {
-    val f = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = backupPath(path)
-    Swap.recover(f, new Path(path), old)
-    val target = spark.read.parquet(path)
-    val before = target.count()
-    val merged = mergeFrames(target, updates, keyCols, versionCol, tiebreakCol)
-    val tmp = path.stripSuffix("/") + "_upserting"
-    merged.write.mode("overwrite").parquet(tmp)
-    Swap.replace(f, new Path(path), new Path(tmp), old)
-    val after = spark.read.parquet(path).count()
-    (before, after)
   }
 }

@@ -62,12 +62,13 @@ object HistogramSketch {
     *
     * `rangeFiles > 0` range-partitions the rows by bucket into that
     * many files before writing, so each file covers a DISJOINT bucket
-    * range and a [[graft.maintain.Manifest]] built on the table
-    * prunes a bucket-range read down to the overlapping files — the
-    * layout for the incremental read path
-    * (`Manifest.readPruned(path, "bucket", lo, hi)`); 0 leaves the
-    * layout to the planner (fine when readers always scan the whole
-    * table). */
+    * range and parquet's footer min/max can skip row groups on a
+    * bucket-range read; 0 leaves the layout to the planner (fine when
+    * readers always scan the whole table). For FILE skipping planned
+    * from metadata alone, commit the same range-partitioned
+    * [[histogramPerBucket]] frame as a snapshot table with bucket
+    * stats (`Snapshots.create(…, statsCols = Seq("bucket"))`) and read
+    * it through `Snapshots.readVersionWhereTime` — the a22x layout. */
   def writeHistogramTable(
       df: DataFrame,
       bucketCol: String,

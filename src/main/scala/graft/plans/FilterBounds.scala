@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
   LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.types.DataType
 
-/** Shared conjunct→range-bounds extraction for the metadata-pruning
-  * optimizer rules ([[ManifestPruneRule]], [[SnapshotPruneRule]]).
+/** Conjunct→range-bounds extraction for the snapshot-manifest pruning
+  * optimizer rule ([[SnapshotPruneRule]]).
   *
   * Walks a Filter condition's AND-conjuncts and collects, per
   * referenced column, the tightest-first `[lo?, hi?]` bound implied by

@@ -17,10 +17,9 @@ import graft.maintain.Snapshots
   * into ORDINARY filtered reads: `Snapshots.read(...).filter(col
   * between lo and hi)` plans only the files whose recorded stat range
   * can overlap — callers no longer need to know the explicit
-  * `readVersionWhere` API to get manifest file-skipping, exactly the
-  * way `spark.graft.manifestPruning` already upgrades plain parquet
-  * dirs. Opt-in via `spark.graft.snapshotPruning=true` (the rule reads
-  * tiny manifest parquet at optimization time).
+  * `readVersionWhere` API to get manifest file-skipping. Opt-in via
+  * `spark.graft.snapshotPruning=true` (the rule reads tiny manifest
+  * parquet at optimization time).
   *
   * Shape: `Filter(cond, LogicalRelation(parquet))` whose root paths
   * are all LEAF FILES under one snapshot table's `data/batch-*` dirs —

@@ -95,17 +95,4 @@ object Flatten {
           relCounts.as("rel_counts"),
           attrs.as("attrs")): _*)
       .withColumn("agency", agencyFromId(col("id")))
-
-  /** Explode `included[]` into a child attachments table — the v2
-    * feature SURVEY §2.10 calls out (the reference only counts the
-    * array, convert_to_iceberg.py:390-396). */
-  def includedAttachments(raw: DataFrame): DataFrame =
-    good(raw)
-      .select(
-        col("data.id").as("parent_id"),
-        explode(col("included")).as("att"))
-      .select(
-        col("parent_id"),
-        col("att.id").as("attachment_id"),
-        col("att.type").as("attachment_type"))
 }

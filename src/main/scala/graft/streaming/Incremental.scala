@@ -21,8 +21,8 @@ object Incremental {
 
   /** Drain all currently-available JSON files into an append-mode
     * parquet table, then stop. Re-running after new files arrive
-    * appends only the new ones (checkpoint-tracked). */
-  /** `maxFilesPerTrigger` bounds each micro-batch (back-pressure for
+    * appends only the new ones (checkpoint-tracked).
+    * `maxFilesPerTrigger` bounds each micro-batch (back-pressure for
     * a large backlog: N files' worth of state/memory per batch instead
     * of the whole directory at once — AvailableNow still drains
     * everything, just in more, smaller batches). */
@@ -250,12 +250,17 @@ object Incremental {
       .start()
 
   /** Streaming upsert sink: apply each micro-batch as a MERGE into a
-    * parquet table via foreachBatch + maintain.Upsert — the CDC
-    * pattern (a stream of keyed updates continuously folded into a
-    * queryable table, latest version winning). foreachBatch gives
-    * exactly-once per batch id against the checkpoint; the merge
-    * itself is one windowed shuffle on the key per batch. The first
-    * batch creates the table. */
+    * snapshot table — the CDC pattern (a stream of keyed updates
+    * continuously folded into a queryable table, latest version
+    * winning). The first batch creates the table (the batch itself
+    * deduplicated by [[graft.maintain.Upsert.mergeFrames]]); every
+    * later batch is one [[graft.maintain.Snapshots.commitUpsert]]
+    * version. Each commit is one atomic manifest rename, so a crash
+    * mid-batch leaves the previous version intact (its unreferenced
+    * data batch is swept by `expire`/`vacuum`), and a batch replayed
+    * after its commit but before the checkpoint's converges: the
+    * merge is latest-wins, so folding the same rows in again changes
+    * nothing. Read the table with `Snapshots.read`. */
   def upsertStream(
       updates: DataFrame,
       destDir: String,
@@ -265,63 +270,19 @@ object Incremental {
       tiebreakCol: String): StreamingQuery =
     updates.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val dest = new org.apache.hadoop.fs.Path(destDir)
-        val fs = dest
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // A crash inside a prior batch's swap leaves the table only at
-        // the backup path; heal it BEFORE the exists() probe, else
-        // "table absent but backup present" is misread as "first
-        // batch" and the table is recreated from one micro-batch,
-        // silently shadowing every previously-merged row.
-        graft.maintain.Swap.recover(
-          fs, dest, graft.maintain.Upsert.backupPath(destDir))
-        // "live" requires at least one committed data file: a crash
-        // DURING the initial create leaves destDir with only
-        // _temporary debris, and treating that as an existing table
-        // would wedge every replay on an unreadable parquet dir.
-        val live = fs.exists(dest) &&
-          graft.maintain.Compaction.stats(spark, destDir).files > 0
-        if (!live) {
-          if (fs.exists(dest) && !fs.delete(dest, true))
-            throw new graft.maintain.Swap.SwapFailedException(
-              s"could not clear half-created table at $destDir")
-          // create via tmp + checked rename so a crash mid-write never
-          // leaves a half-table at the final path
-          val tmp = new org.apache.hadoop.fs.Path(
-            destDir.stripSuffix("/") + "_upserting")
-          graft.maintain.Upsert
-            .mergeFrames(batch.limit(0), batch, keyCols, versionCol,
-              tiebreakCol)
-            .write.mode("overwrite").parquet(tmp.toString)
-          if (!fs.rename(tmp, dest))
-            throw new graft.maintain.Swap.SwapFailedException(
-              s"rename $tmp -> $dest failed creating the table")
-        } else
-          graft.maintain.Upsert.upsertPath(
-            spark, destDir, batch, keyCols, versionCol, tiebreakCol)
+        import graft.maintain.{Snapshots, Upsert}
+        if (!Snapshots.exists(batch.sparkSession, destDir))
+          Snapshots.create(Upsert.mergeFrames(batch.limit(0), batch,
+            keyCols, versionCol, tiebreakCol), destDir)
+        else
+          Snapshots.commitUpsert(batch, destDir, keyCols, versionCol,
+            tiebreakCol)
         ()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** Streaming drift monitor: every micro-batch of a document stream
-    * is scored against a FROZEN reference distribution
-    * ([[graft.llm.Drift.driftAgainstFrozen]] over
-    * [[graft.llm.Drift.referenceVocab]]), and one
-    * `(batch_id, n_vocab, tokens_batch, js_divergence,
-    * top_drift_token, top_drift_abs)` row is appended to a parquet
-    * drift log — the deployment shape of the corpus-drift check: the
-    * yardstick never moves, each batch costs one bounded aggregate
-    * against a broadcast vocab, and the log is itself queryable for
-    * alerting/trending. The log write is IDEMPOTENT per batch id:
-    * each batch overwrites only its own `batch_id=` partition
-    * (dynamic partition overwrite), so a replay of a batch that
-    * crashed mid-write replaces its partial output instead of
-    * appending duplicate rows — exactly-once in the log even though
-    * foreachBatch itself only guarantees at-least-once execution.
-    * No stream-stream state anywhere. */
   /** Streaming cluster router: every incoming vector is assigned to
     * its nearest FROZEN Lloyd-trained centroid — the deployment shape
     * for routing fresh documents to per-domain pipelines (or experts)
@@ -345,27 +306,6 @@ object Incremental {
       .outputMode("append")
       .start()
 
-  /** Streaming ANN-index maintenance: every micro-batch of fresh
-    * vectors is appended to a persisted IVF-PQ serving index
-    * ([[graft.llm.Quantize.appendToPqIndex]] — assign to the FROZEN
-    * coarse quantizer, encode with the FROZEN codebook, append the
-    * codes as the batch's own segment). foreachBatch because the sink
-    * is the index layout, not a row stream; foreachBatch is
-    * at-least-once, so the append is made EXACTLY-ONCE by passing the
-    * checkpoint's batch id as the segment id — a replayed batch
-    * (crash after the codes write, before the checkpoint commit)
-    * overwrites its own segment instead of duplicating code rows
-    * (which would return duplicate ids from top-k). Per-batch cost is
-    * one scan of the batch (centroids + codebook broadcast, zero
-    * shuffles, existing codes never read), so the stream's cost is
-    * linear in arrivals and probes stay consistent throughout (the
-    * tables a probe ranks with are immutable under append). Batch ≡
-    * stream by construction: the SAME appendToPqIndex body serves
-    * both (pinned in StreamingSpec — streamed-in index probe ≡
-    * batch-appended index probe, and a replayed batch ≡ applied
-    * once), and the `st_ann_index_append` row pins appended-index
-    * search against a DuckDB re-derivation of frozen-train +
-    * full-corpus scoring. */
   /** Segment-id namespace for the index-append stream arms: the batch
     * id alone is CHECKPOINT-scoped — a second stream with its own
     * checkpoint, or one whose checkpoint was recreated, restarts at
@@ -421,6 +361,27 @@ object Incremental {
     }
   }
 
+  /** Streaming ANN-index maintenance: every micro-batch of fresh
+    * vectors is appended to a persisted IVF-PQ serving index
+    * ([[graft.llm.Quantize.appendToPqIndex]] — assign to the FROZEN
+    * coarse quantizer, encode with the FROZEN codebook, append the
+    * codes as the batch's own segment). foreachBatch because the sink
+    * is the index layout, not a row stream; foreachBatch is
+    * at-least-once, so the append is made EXACTLY-ONCE by passing the
+    * checkpoint's batch id as the segment id — a replayed batch
+    * (crash after the codes write, before the checkpoint commit)
+    * overwrites its own segment instead of duplicating code rows
+    * (which would return duplicate ids from top-k). Per-batch cost is
+    * one scan of the batch (centroids + codebook broadcast, zero
+    * shuffles, existing codes never read), so the stream's cost is
+    * linear in arrivals and probes stay consistent throughout (the
+    * tables a probe ranks with are immutable under append). Batch ≡
+    * stream by construction: the SAME appendToPqIndex body serves
+    * both (pinned in StreamingSpec — streamed-in index probe ≡
+    * batch-appended index probe, and a replayed batch ≡ applied
+    * once), and the `st_ann_index_append` row pins appended-index
+    * search against a DuckDB re-derivation of frozen-train +
+    * full-corpus scoring. */
   def annIndexAppendStream(
       vecs: DataFrame,
       indexPath: String,
@@ -637,6 +598,22 @@ object Incremental {
       .outputMode("append")
       .start()
 
+  /** Streaming drift monitor: every micro-batch of a document stream
+    * is scored against a FROZEN reference distribution
+    * ([[graft.llm.Drift.driftAgainstFrozen]] over
+    * [[graft.llm.Drift.referenceVocab]]), and one
+    * `(batch_id, n_vocab, tokens_batch, js_divergence,
+    * top_drift_token, top_drift_abs)` row is appended to a parquet
+    * drift log — the deployment shape of the corpus-drift check: the
+    * yardstick never moves, each batch costs one bounded aggregate
+    * against a broadcast vocab, and the log is itself queryable for
+    * alerting/trending. The log write is IDEMPOTENT per batch id:
+    * each batch overwrites only its own `batch_id=` partition
+    * (dynamic partition overwrite), so a replay of a batch that
+    * crashed mid-write replaces its partial output instead of
+    * appending duplicate rows — exactly-once in the log even though
+    * foreachBatch itself only guarantees at-least-once execution.
+    * No stream-stream state anywhere. */
   def driftStream(
       docs: DataFrame,
       refDocs: DataFrame,

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CLI end-to-end: convert a fixture tree, query, profile, optimize —
-  * the user-facing surface of the reference's three entry points. */
+/** CLI end-to-end: convert a fixture tree, query, profile, optimize,
+  * vacuum — the user-facing surface of the reference's three entry
+  * points. */
 class CliSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -382,28 +383,32 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("optimize compacts via the CLI") {
+    import graft.maintain.Snapshots
     val path = TestSpark.tmpDir("cli-compact") + "/t"
-    graft.maintain.Compaction.fragment(
-      Tables.orders(spark, TestSpark.sf0001), path, 15)
+    val orders = Tables.orders(spark, TestSpark.sf0001)
+    Snapshots.create(orders.repartition(15), path)
+    assert(Snapshots.read(spark, path).inputFiles.length == 15)
     graft.cli.Main.run(spark, Array("optimize", path, "2"))
-    assert(graft.maintain.Compaction.stats(spark, path).files == 2)
+    assert(Snapshots.versions(spark, path) == Seq(1L, 2L))
+    assert(Snapshots.read(spark, path).inputFiles.length == 2)
+    assert(Snapshots.read(spark, path).count() == orders.count())
   }
 
-  test("vacuum sweeps swap leftovers via the CLI") {
-    val root = TestSpark.tmpDir("cli-vacuum")
+  test("vacuum sweeps orphaned snapshot batches via the CLI and drops no version") {
+    import graft.maintain.Snapshots
     import spark.implicits._
-    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$root/t_preupsert")
-    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$root/u")
-    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$root/u_compacting")
-    // lookalike: tmp-suffixed NAME but no base/backup → real user data
-    Seq((3L, "c")).toDF("id", "v").write.parquet(s"$root/w_upserting")
+    val root = TestSpark.tmpDir("cli-vacuum")
+    Snapshots.create(Seq((1L, "a")).toDF("id", "v"), s"$root/t")
+    Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), s"$root/t")
+    // a commit that crashed before its manifest claim, hours ago
+    val orphan = new java.io.File(s"$root/t/data/batch-crashed000000001")
+    Seq((3L, "c")).toDF("id", "v").write.parquet(orphan.getPath)
+    orphan.setLastModified(System.currentTimeMillis() - 2 * 3600 * 1000L)
     graft.cli.Main.run(spark, Array("vacuum", root))
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val left = fs.listStatus(new org.apache.hadoop.fs.Path(root))
-      .map(_.getPath.getName).sorted.toSeq
-    assert(left == Seq("t", "u", "w_upserting"),
-      s"expected recovered t, swept u_compacting, kept lookalike: $left")
+    assert(!orphan.exists, "orphaned batch not swept")
+    assert(Snapshots.versions(spark, s"$root/t") == Seq(1L, 2L))
+    assert(Snapshots.readVersion(spark, s"$root/t", 1L).count() == 1)
+    assert(Snapshots.read(spark, s"$root/t").count() == 2)
   }
 
   test("curate runs the pipeline end-to-end via the CLI") {
@@ -729,15 +734,22 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("manifest builds via the CLI") {
-    val out = TestSpark.tmpDir("cli-manifest")
-    Tables.orders(spark, TestSpark.sf0001)
-      .write.mode("overwrite").parquet(out)
+    import graft.maintain.Snapshots
+    import spark.implicits._
+    val out = TestSpark.tmpDir("cli-manifest") + "/t"
+    Snapshots.create(Tables.orders(spark, TestSpark.sf0001), out)
     graft.cli.Main.run(spark,
       Array("manifest", out, "o_totalprice,o_orderkey"))
-    assert(graft.maintain.Manifest.exists(spark, out))
-    assert(graft.maintain.Manifest
-      .columnsIfPresent(spark, out)
-      .contains(Seq("o_totalprice", "o_orderkey")))
+    assert(Snapshots.versions(spark, out) == Seq(1L, 2L))
+    // the new version's manifest carries o_totalprice min/max over
+    // range-clustered files: a range read plans fewer files, same rows
+    val inRange = $"o_totalprice".between(100000, 150000)
+    val planned = Snapshots.readVersionWhere(
+      spark, out, 2L, "o_totalprice", 100000, 150000)
+    assert(planned.inputFiles.length <
+      Snapshots.read(spark, out).inputFiles.length)
+    assert(planned.filter(inRange).count() ==
+      Snapshots.read(spark, out).filter(inRange).count())
   }
 
   test("unknown command rejected") {

@@ -79,30 +79,34 @@ class HistogramSketchSpec extends AnyFunSuite {
   }
 
   test("range-partitioned table + manifest skips files for a bucket range") {
-    // the a22x layout: rangeFiles spreads buckets across files with
-    // disjoint ranges, so a narrow bucket-range read must touch a
-    // strict subset of files and still return identical rows
-    import graft.maintain.Manifest
-    import org.apache.spark.sql.functions.{col, to_date}
-    val dir = java.nio.file.Files.createTempDirectory("histprune").toString
-    val ev = Tables.events(spark, TestSpark.sf0001)
-    HistogramSketch.writeHistogramTable(
-      ev.withColumn("day", to_date(col("ts"))), "day", "value",
-      0.0, 500.0, 64, outPath = dir, rangeFiles = 8)
-    Manifest.build(spark, dir, Seq("bucket"))
-    val lo = java.sql.Date.valueOf("2024-01-02")
-    val hi = java.sql.Date.valueOf("2024-01-09")
-    val all = Manifest.read(spark, dir).count()
-    val cand = Manifest.candidateFiles(spark, dir, "bucket", lo, hi)
-    assert(all == 8L, s"expected 8 range files, manifest has $all")
-    assert(cand.nonEmpty && cand.size < all,
-      s"range read should skip files: ${cand.size} of $all")
-    val pruned = Manifest.readPruned(spark, dir, "bucket", lo, hi)
+    // the a22x layout: a snapshot table range-partitioned on the
+    // bucket into 8 files, per-file bucket stats in its manifest — a
+    // narrow bucket-range read must plan a strict subset of the head's
+    // files and still return exactly the filtered full read's rows
+    import graft.maintain.Snapshots
+    import graft.queries.ProfileQueries
+    import org.apache.spark.sql.functions.col
+    val dir = ProfileQueries.histTable(spark, TestSpark.sf0001)
+    assert(Snapshots.versions(spark, dir) == Seq(1L))
+    val head = Snapshots.read(spark, dir)
+    val all = head.inputFiles.toSet
+    val range = col("bucket").between("2024-01-02", "2024-01-09")
+    val planned = Snapshots.readVersionWhereTime(
+      spark, dir, 1L, "bucket", "2024-01-02", "2024-01-09")
+    val cand = planned.inputFiles.toSet
+    assert(all.size == 8, s"expected 8 range files, head has ${all.size}")
+    assert(cand.nonEmpty && cand.subsetOf(all) && cand.size < all.size,
+      s"range read should skip files: ${cand.size} of ${all.size}")
+    val pruned = planned.filter(range)
       .orderBy("bucket", "bin").collect().toSeq
-    val full = spark.read.parquet(dir)
-      .filter(col("bucket").between(lo, hi))
-      .orderBy("bucket", "bin").collect().toSeq
-    assert(pruned == full)
+    val full = head.filter(range).orderBy("bucket", "bin").collect().toSeq
+    assert(full.nonEmpty && pruned == full)
+    // a22x itself plans exactly that pruned subset of the table and
+    // answers what a22 does
+    val a22x = ProfileQueries.a22x.run(spark, TestSpark.sf0001)
+    assert(a22x.inputFiles.toSet.intersect(all) == cand)
+    assert(a22x.collect().toSeq ==
+      ProfileQueries.a22.run(spark, TestSpark.sf0001).collect().toSeq)
   }
 
   test("plan: the quantile walk contains no window operator") {

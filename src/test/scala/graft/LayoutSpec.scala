@@ -44,10 +44,11 @@ class LayoutSpec extends AnyFunSuite {
       .drop("__graft_z")
       .write.mode("overwrite").parquet(zDir)
 
-    def avgWidth(dir: String, c: String): Double = {
-      val files = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-      assert(files.length >= 4, s"expected several files in $dir")
+    def avgWidth(dir: String, c: String): Double =
+      avgWidthOf(new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath), c)
+    def avgWidthOf(files: Seq[String], c: String): Double = {
+      assert(files.length >= 4, s"expected several files: $files")
       val widths = files.map { f =>
         val r = spark.read.parquet(f)
           .agg(min(col(c)).cast("double"), max(col(c)).cast("double"))
@@ -60,8 +61,8 @@ class LayoutSpec extends AnyFunSuite {
     val zB = avgWidth(zDir, "b")
     val zA = avgWidth(zDir, "a")
 
-    // scale path — what writeZOrdered/rewriteZOrdered (and thus the
-    // CLI) actually execute: approx-quantile z-key, no global ranking
+    // scale path — what writeZOrdered and compactZOrdered (and thus
+    // the CLI) actually execute: approx-quantile z-key, no global ranking
     // window. Pin that property in the physical plan: no Window node
     // and no single-partition global Sort/Exchange anywhere.
     val zaPlan = Layout.zOrdered(df, "a", "b", 8)
@@ -77,12 +78,18 @@ class LayoutSpec extends AnyFunSuite {
     assert(zaB < linB * 0.7,
       s"approx z-order did not tighten b: $zaB vs linear $linB")
 
-    // CLI round-trip: in-place rewrite of the linear layout must
-    // produce the same z-clustering (and keep every row)
+    // CLI round-trip: z-order compaction of a snapshot table holding
+    // the linear layout must produce the same z-clustering as a new
+    // version (and keep every row)
+    import graft.maintain.Snapshots
+    val snap = TestSpark.tmpDir("layout-snap") + "/t"
+    Snapshots.create(spark.read.parquet(linDir), snap)
     graft.cli.Main.run(spark,
-      Array("optimize", linDir, "8", "--zorder", "a,b"))
-    assert(spark.read.parquet(linDir).count() == n)
-    assert(avgWidth(linDir, "b") < linB * 0.6,
+      Array("optimize", snap, "8", "--zorder", "a,b"))
+    assert(Snapshots.versions(spark, snap) == Seq(1L, 2L))
+    val head = Snapshots.read(spark, snap)
+    assert(head.count() == n)
+    assert(avgWidthOf(head.inputFiles.toSeq, "b") < linB * 0.6,
       "CLI z-order rewrite did not tighten b")
     // linear: b spans ~the whole domain per file; z-order: both dims
     // must be materially tighter than the full domain

@@ -3,133 +3,43 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.maintain.Manifest
+import graft.maintain.Snapshots
 
+/** File-level min/max in snapshot commit manifests over the orders
+  * fixture: a range read planned from the manifest (explicitly through
+  * `readVersionWhere`, or by the `spark.graft.snapshotPruning`
+  * optimizer rule) opens fewer files and returns exactly the filtered
+  * full read. Synthetic edge cases of the rule live in
+  * SnapshotPruneSpec. */
 class ManifestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def writeRangeClustered(): String = {
-    val dir = TestSpark.tmpDir("manifest-table")
-    Tables.orders(spark, TestSpark.sf0001)
+  private val ConfKey = "spark.graft.snapshotPruning"
+  private val inRange = $"o_totalprice".between(100000, 150000)
+
+  /** Orders in 8 files range-clustered on `o_totalprice`, per-file
+    * stats on `statsCols`, as snapshot v1. */
+  private def rangeClustered(
+      statsCols: Seq[String] = Seq("o_totalprice")): String = {
+    val t = TestSpark.tmpDir("manifest-table") + "/t"
+    Snapshots.create(Tables.orders(spark, TestSpark.sf0001)
       .repartitionByRange(8, $"o_totalprice")
-      .sortWithinPartitions($"o_totalprice")
-      .write.mode("overwrite").parquet(dir)
-    dir
+      .sortWithinPartitions($"o_totalprice"), t, statsCols = statsCols)
+    t
   }
 
-  test("pruned read ≡ full read + filter (range-clustered table)") {
-    val dir = writeRangeClustered()
-    Manifest.build(spark, dir, Seq("o_totalprice", "o_orderkey"))
-    assert(Manifest.exists(spark, dir))
-    val full = spark.read.parquet(dir)
-      .filter($"o_totalprice" >= 100000 && $"o_totalprice" <= 150000)
-      .select("o_orderkey").as[Long].collect().toSet
-    val pruned = Manifest
-      .readPruned(spark, dir, "o_totalprice", 100000, 150000)
-      .select("o_orderkey").as[Long].collect().toSet
-    assert(pruned == full)
-    assert(full.nonEmpty)
-  }
+  private def keys(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.select("o_orderkey").as[Long].collect().toSet
 
-  test("manifest actually prunes files on a clustered column") {
-    val dir = writeRangeClustered()
-    Manifest.build(spark, dir, Seq("o_totalprice"))
-    val total = Manifest.read(spark, dir).count()
-    val cands = Manifest
-      .candidateFiles(spark, dir, "o_totalprice", 100000, 150000)
-    assert(total >= 8)
-    assert(cands.size < total,
-      s"no pruning: ${cands.size} of $total files selected")
-  }
+  private def headFiles(t: String): Int =
+    Snapshots.read(spark, t).inputFiles.length
 
-  test("manifest read sees no data files' hidden sibling") {
-    // the _graft_manifest dir must be invisible to plain table reads
-    val dir = writeRangeClustered()
-    val before = spark.read.parquet(dir).count()
-    Manifest.build(spark, dir, Seq("o_totalprice"))
-    assert(spark.read.parquet(dir).count() == before)
-  }
-
-  test("all-null stats files are kept (conservative pruning)") {
-    val dir = TestSpark.tmpDir("manifest-nulls")
-    val withNulls = spark.range(0, 100).toDF("k")
-      .withColumn("v", when($"k" < 50, $"k").otherwise(lit(null)))
-      .withColumn("bucket", when($"k" < 50, 0).otherwise(1))
-      .repartition(2, $"bucket")
-      .drop("bucket")
-    withNulls.write.mode("overwrite").parquet(dir)
-    Manifest.build(spark, dir, Seq("v"))
-    val full = spark.read.parquet(dir)
-      .filter($"v" >= 10 && $"v" <= 20)
-      .select("k").as[Long].collect().toSet
-    val pruned = Manifest.readPruned(spark, dir, "v", 10, 20)
-      .select("k").as[Long].collect().toSet
-    assert(pruned == full)
-    assert(full == (10L to 20L).toSet)
-  }
-
-  test("empty overlap returns an empty, correctly-typed frame") {
-    val dir = writeRangeClustered()
-    Manifest.build(spark, dir, Seq("o_totalprice"))
-    val none = Manifest.readPruned(
-      spark, dir, "o_totalprice", 100000000, 200000000)
-    assert(none.count() == 0)
-    assert(none.columns.contains("o_orderkey"))
-  }
-
-  test("rows appended after the manifest build are still read (pruned)") {
-    val dir = writeRangeClustered()
-    Manifest.build(spark, dir, Seq("o_totalprice"))
-    // append a delta the manifest knows nothing about (full schema)
-    Tables.orders(spark, TestSpark.sf0001).limit(1)
+  /** Appends one stat-less order with key 999999 inside `inRange`. */
+  private def appendUnknown(t: String): Unit =
+    Snapshots.commitAppend(Tables.orders(spark, TestSpark.sf0001).limit(1)
       .withColumn("o_orderkey", lit(999999L))
-      .withColumn("o_totalprice", lit(125000.0))
-      .write.mode("append").parquet(dir)
-    val pruned = Manifest
-      .readPruned(spark, dir, "o_totalprice", 100000, 150000)
-      .select("o_orderkey").as[Long].collect().toSet
-    assert(pruned.contains(999999L),
-      "appended rows silently dropped by a stale manifest")
-    val full = spark.read.parquet(dir)
-      .filter($"o_totalprice".between(100000, 150000))
-      .select("o_orderkey").as[Long].collect().toSet
-    assert(pruned == full)
-  }
-
-  test("compaction and z-order refresh an existing manifest") {
-    val dir = writeRangeClustered()
-    Manifest.build(spark, dir, Seq("o_totalprice"))
-    val filesBefore = Manifest.read(spark, dir)
-      .select("file").as[String].collect().toSet
-    graft.maintain.Compaction.compact(spark, dir, 3)
-    assert(Manifest.exists(spark, dir),
-      "manifest lost after compaction swap")
-    val filesAfter = Manifest.read(spark, dir)
-      .select("file").as[String].collect().toSet
-    assert((filesAfter intersect filesBefore).isEmpty,
-      "manifest still lists pre-compaction files — stale after rewrite")
-    // and pruned reads stay correct against the new layout
-    val full = spark.read.parquet(dir)
-      .filter($"o_totalprice".between(100000, 150000))
-      .count()
-    assert(Manifest.readPruned(spark, dir, "o_totalprice",
-      100000, 150000).count() == full)
-  }
-
-  test("driver envelope guard: warns past the entry ceiling, quiet below") {
-    // the guard is the seam candidateFiles runs its listing and
-    // manifest sizes through; a multi-million-file table must produce
-    // a warning rather than a silent multi-GB driver heap
-    assert(!Manifest.checkDriverEnvelope(100L, "small table"))
-    assert(Manifest.checkDriverEnvelope(
-      Manifest.EnvelopeWarnEntries + 1, "synthetic huge manifest"))
-    // custom threshold path (what a per-deployment wrapper would set)
-    assert(Manifest.checkDriverEnvelope(1001L, "t", threshold = 1000L))
-    assert(!Manifest.checkDriverEnvelope(1000L, "t", threshold = 1000L))
-  }
-
-  // ---- optimizer-rule wiring (spark.graft.manifestPruning) -----------
+      .withColumn("o_totalprice", lit(125000.0)), t)
 
   private def scanFileCount(df: org.apache.spark.sql.DataFrame): Int =
     df.queryExecution.optimizedPlan.collect {
@@ -139,80 +49,137 @@ class ManifestSpec extends AnyFunSuite {
           .location.inputFiles.length
     }.sum
 
+  private def withRule[T](body: => T): T = {
+    spark.conf.set(ConfKey, "true")
+    try body finally spark.conf.set(ConfKey, "false")
+  }
+
+  test("pruned read ≡ full read + filter (range-clustered table)") {
+    val t = rangeClustered(Seq("o_totalprice", "o_orderkey"))
+    val full = keys(Snapshots.read(spark, t).filter(inRange))
+    val pruned = keys(Snapshots.readVersionWhere(
+      spark, t, 1L, "o_totalprice", 100000, 150000).filter(inRange))
+    assert(full.nonEmpty && pruned == full)
+  }
+
+  test("manifest actually prunes files on a clustered column") {
+    val t = rangeClustered()
+    val total = headFiles(t)
+    val cands = Snapshots.readVersionWhere(
+      spark, t, 1L, "o_totalprice", 100000, 150000).inputFiles.length
+    assert(total >= 8)
+    assert(cands < total, s"no pruning: $cands of $total files selected")
+  }
+
+  test("all-null stats files are kept (conservative pruning)") {
+    val t = TestSpark.tmpDir("manifest-nulls") + "/t"
+    // one file holds v = 0..49, the other only NULLs (no recorded stat)
+    Snapshots.create(spark.range(0, 100).toDF("k")
+      .withColumn("v", when($"k" < 50, $"k").otherwise(lit(null)))
+      .repartition(2, when($"k" < 50, 0).otherwise(1)), t,
+      statsCols = Seq("v"))
+    val full = Snapshots.read(spark, t).filter($"v".between(10, 20))
+      .select("k").as[Long].collect().toSet
+    val pruned = Snapshots.readVersionWhere(spark, t, 1L, "v", 10, 20)
+      .filter($"v".between(10, 20)).select("k").as[Long].collect().toSet
+    assert(pruned == full)
+    assert(full == (10L to 20L).toSet)
+  }
+
+  test("empty overlap returns an empty, correctly-typed frame") {
+    val t = rangeClustered()
+    val none = Snapshots.readVersionWhere(
+      spark, t, 1L, "o_totalprice", 100000000, 200000000)
+    assert(none.count() == 0)
+    assert(none.columns.contains("o_orderkey"))
+  }
+
+  test("rows appended after the manifest build are still read (pruned)") {
+    val t = rangeClustered()
+    appendUnknown(t)
+    val pruned = keys(Snapshots.readVersionWhere(
+      spark, t, 2L, "o_totalprice", 100000, 150000).filter(inRange))
+    assert(pruned.contains(999999L),
+      "appended rows silently dropped by the stat-less file")
+    assert(pruned == keys(Snapshots.read(spark, t).filter(inRange)))
+  }
+
+  test("compaction and z-order refresh an existing manifest") {
+    val t = rangeClustered()
+    val expected = keys(Snapshots.read(spark, t).filter(inRange))
+    val v1Files = Snapshots.read(spark, t).inputFiles.toSet
+    // z-order (new files, stats re-recorded on both columns), then a
+    // range-clustering compaction back onto o_totalprice
+    Snapshots.compactZOrdered(spark, t, "o_totalprice", "o_orderkey", 3)
+    Snapshots.compactClustered(spark, t, Seq("o_totalprice"))
+    for (v <- Seq(2L, 3L)) {
+      val planned = Snapshots.readVersionWhere(
+        spark, t, v, "o_totalprice", 100000, 150000)
+      assert((planned.inputFiles.toSet intersect v1Files).isEmpty,
+        s"v$v still plans pre-compaction files")
+      assert(keys(planned.filter(inRange)) == expected)
+    }
+    assert(Snapshots.readVersionWhere(spark, t, 3L, "o_totalprice",
+      100000, 150000).inputFiles.length < headFiles(t))
+  }
+
   test("optimizer rule prunes a plain filter query when the flag is on") {
-    val dir = writeRangeClustered()
-    Manifest.build(spark, dir, Seq("o_totalprice"))
-    def q() = spark.read.parquet(dir)
-      .filter($"o_totalprice" >= 100000 && $"o_totalprice" <= 150000)
-    val total = spark.read.parquet(dir).inputFiles.length
-    val expected = q().select("o_orderkey").as[Long].collect().toSet
+    val t = rangeClustered()
+    def q() = Snapshots.read(spark, t).filter(inRange)
+    val total = headFiles(t)
+    val expected = keys(q())
     assert(scanFileCount(q()) == total, "flag off → no pruning")
-    spark.conf.set("spark.graft.manifestPruning", "true")
-    try {
-      val pruned = q()
-      assert(scanFileCount(pruned) < total,
-        s"rule did not prune: ${scanFileCount(pruned)} of $total files")
-      assert(pruned.select("o_orderkey").as[Long].collect().toSet
-        == expected, "pruned result must be bit-identical")
+    withRule {
+      assert(scanFileCount(q()) < total,
+        s"rule did not prune: ${scanFileCount(q())} of $total files")
+      assert(keys(q()) == expected, "pruned result must be bit-identical")
       // one-sided bound prunes too (top range partition only)
-      val oneSided = spark.read.parquet(dir)
+      val oneSided = Snapshots.read(spark, t)
         .filter($"o_totalprice" >= 500000)
       assert(scanFileCount(oneSided) < total)
-      assert(oneSided.count() == spark.read.parquet(dir)
+      assert(oneSided.count() == Tables.orders(spark, TestSpark.sf0001)
         .filter($"o_totalprice" >= 500000).count())
-    } finally spark.conf.set("spark.graft.manifestPruning", "false")
+    }
   }
 
   test("optimizer rule is conservative: appended files still read") {
-    val dir = writeRangeClustered()
-    Manifest.build(spark, dir, Seq("o_totalprice"))
-    Tables.orders(spark, TestSpark.sf0001).limit(1)
-      .withColumn("o_orderkey", lit(999999L))
-      .withColumn("o_totalprice", lit(125000.0))
-      .write.mode("append").parquet(dir)
-    spark.conf.set("spark.graft.manifestPruning", "true")
-    try {
-      val got = spark.read.parquet(dir)
-        .filter($"o_totalprice" >= 100000 && $"o_totalprice" <= 150000)
-        .select("o_orderkey").as[Long].collect().toSet
-      assert(got.contains(999999L),
-        "file appended after the manifest build was pruned away")
-    } finally spark.conf.set("spark.graft.manifestPruning", "false")
+    val t = rangeClustered()
+    appendUnknown(t)
+    withRule {
+      assert(keys(Snapshots.read(spark, t).filter(inRange))
+        .contains(999999L),
+        "file appended without stats was pruned away")
+    }
   }
 
   test("optimizer rule leaves unprunable plans untouched") {
-    val dir = writeRangeClustered()
-    Manifest.build(spark, dir, Seq("o_totalprice"))
-    val total = spark.read.parquet(dir).inputFiles.length
-    spark.conf.set("spark.graft.manifestPruning", "true")
-    try {
-      // predicate on a non-manifested column → no bounds → no rewrite
-      val other = spark.read.parquet(dir).filter($"o_orderkey" >= 10)
-      assert(scanFileCount(other) == total)
+    val t = rangeClustered()
+    val total = headFiles(t)
+    withRule {
+      // predicate on a column without stats → no bounds → no rewrite
+      assert(scanFileCount(Snapshots.read(spark, t)
+        .filter($"o_orderkey" >= 10)) == total)
       // non-range predicate → no rewrite
-      val like = spark.read.parquet(dir)
-        .filter($"o_orderstatus".startsWith("O"))
-      assert(scanFileCount(like) == total)
-    } finally spark.conf.set("spark.graft.manifestPruning", "false")
+      assert(scanFileCount(Snapshots.read(spark, t)
+        .filter($"o_orderstatus".startsWith("O"))) == total)
+    }
   }
 
   test("optimizer rule prunes IN-lists per value (P6 isin vocabulary)") {
-    val dir = TestSpark.tmpDir("manifest-in")
+    val t = TestSpark.tmpDir("manifest-in") + "/t"
     // id-clustered: each of 8 files holds one contiguous key range
-    Tables.orders(spark, TestSpark.sf0001)
-      .repartitionByRange(8, $"o_orderkey")
-      .write.mode("overwrite").parquet(dir)
-    Manifest.build(spark, dir, Seq("o_orderkey"))
-    val total = spark.read.parquet(dir).inputFiles.length
+    Snapshots.create(Tables.orders(spark, TestSpark.sf0001)
+      .repartitionByRange(8, $"o_orderkey"), t,
+      statsCols = Seq("o_orderkey"))
+    val total = headFiles(t)
     // a docket-id-style IN-list landing in few files; 13 elements also
     // exercises the optimizer's In→InSet conversion past 10
     val few = Seq(2L, 5L, 7L)
     val many = (100L to 112L).toSeq
-    def q(keys: Seq[Long]) =
-      spark.read.parquet(dir).filter($"o_orderkey".isin(keys: _*))
+    def q(keys: Seq[Any]) =
+      Snapshots.read(spark, t).filter($"o_orderkey".isin(keys: _*))
     val (fewExp, manyExp) = (q(few).count(), q(many).count())
-    spark.conf.set("spark.graft.manifestPruning", "true")
-    try {
+    withRule {
       assert(scanFileCount(q(few)) < total,
         s"IN did not prune: ${scanFileCount(q(few))} of $total")
       assert(q(few).count() == fewExp)
@@ -221,27 +188,9 @@ class ManifestSpec extends AnyFunSuite {
       assert(q(many).count() == manyExp)
       // a NULL element adds no matchable value (IN returns null, never
       // true, for it) — dropped from the probe: still prunes, same rows
-      val withNull = spark.read.parquet(dir)
-        .filter($"o_orderkey".isin(2L, 5L, 7L, null))
+      val withNull = q(few :+ null)
       assert(scanFileCount(withNull) < total)
       assert(withNull.count() == fewExp)
-    } finally spark.conf.set("spark.graft.manifestPruning", "false")
-  }
-
-  test("partitioned table keeps its partition column after pruning") {
-    val dir = TestSpark.tmpDir("manifest-part")
-    Tables.orders(spark, TestSpark.sf0001)
-      .withColumn("status", $"o_orderstatus")
-      .write.mode("overwrite").partitionBy("status").parquet(dir)
-    Manifest.build(spark, dir, Seq("o_totalprice"))
-    val pruned = Manifest.readPruned(
-      spark, dir, "o_totalprice", 100000, 200000)
-    assert(pruned.columns.contains("status"))
-    val full = spark.read.parquet(dir)
-      .filter($"o_totalprice".between(100000, 200000))
-      .groupBy("status").count()
-      .as[(String, Long)].collect().toSet
-    assert(pruned.groupBy("status").count()
-      .as[(String, Long)].collect().toSet == full)
+    }
   }
 }

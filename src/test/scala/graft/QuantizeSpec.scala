@@ -210,9 +210,8 @@ class QuantizeSpec extends AnyFunSuite {
 
   test("appended index compacts without changing probe results") {
     // operational story: many small appends fragment the code table
-    // into tiny files; maintain.Compaction consolidates it and the
-    // probe is unchanged (the index tables are plain parquet, so the
-    // whole maintenance toolbox applies to them)
+    // into tiny files; compactPqIndex consolidates it and the probe
+    // is unchanged
     val embs = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select("vec_id", "embedding")
     val qVec = embs.filter($"vec_id" === 7L)
@@ -239,12 +238,11 @@ class QuantizeSpec extends AnyFunSuite {
     assert(Quantize.ivfPqTopKIndexed(spark, path, qVec,
       topK = 10, nprobe = 2, excludeId = 7L)
       .as[(Long, Double)].collect().toSeq == before)
-    val fragFiles = graft.maintain.Compaction
-      .stats(spark, s"$path/codes").files
+    def codeFiles() = spark.read.parquet(s"$path/codes").inputFiles.length
+    val fragFiles = codeFiles()
     assert(fragFiles >= 6, s"appends should fragment: $fragFiles files")
     Quantize.compactPqIndex(spark, path, targetFiles = 2)
-    assert(graft.maintain.Compaction
-      .stats(spark, s"$path/codes").files <= 2)
+    assert(codeFiles() <= 2)
     assert(spark.read.parquet(s"$path/codes").count() == nCodes)
     val after = Quantize.ivfPqTopKIndexed(spark, path, qVec,
       topK = 10, nprobe = 2, excludeId = 7L)

@@ -149,6 +149,28 @@ class SegmentsSpec extends AnyFunSuite {
     assert(spark.read.parquet(t).count() == 4)
   }
 
+  test("a stale swap backup beside a live index is deleted, never merged in") {
+    // crash window: a compaction died after its second rename but
+    // before deleting the backup — the live table is complete and
+    // __swap_bak holds an older copy. The next append and the next
+    // compaction must each drop that copy, never read it.
+    val t = TestSpark.tmpDir("segments_stalebak") + "/tbl"
+    val bak = new Path(t + "__swap_bak")
+    val fs = bak.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def plantStale(): Unit =
+      Seq(99).toDF("x").write.parquet(s"$bak/seg=${Segments.BaseSeg}")
+    def xs() = spark.read.parquet(t).select("x").as[Int].collect().sorted.toSeq
+    Segments.writeBase(Seq(1, 2, 3).toDF("x"), t)
+    plantStale()
+    Segments.writeSegment(Seq(4).toDF("x"), t, "b0")
+    assert(!fs.exists(bak), "append left the stale backup")
+    assert(xs() == Seq(1, 2, 3, 4), "stale backup rows resurfaced")
+    plantStale()
+    Segments.replaceTable(spark, t)(identity)
+    assert(!fs.exists(bak), "compaction left the stale backup")
+    assert(xs() == Seq(1, 2, 3, 4), "stale backup rows resurfaced")
+  }
+
   test("probe interleaved with a compaction swap sees old-or-new, never halves") {
     import graft.llm.Retrieval
     val corpus = Tables.documents(spark, TestSpark.sf0001)

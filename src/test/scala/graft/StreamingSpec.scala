@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.maintain.Compaction
+import graft.maintain.Snapshots
 import graft.streaming.{Incremental, StreamQueries}
 
 class StreamingSpec extends AnyFunSuite {
@@ -921,19 +921,49 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable(); q.stop()
     }
     drain()
-    assert(spark.read.parquet(dest).count() == 2)
+    assert(Snapshots.read(spark, dest).count() == 2)
     // second batch: update id=2, insert id=3; stale ver=0 must lose
     put("b2.json",
       """{"id": 2, "v": "B", "ver": 2}""",
       """{"id": 2, "v": "stale", "ver": 0}""",
       """{"id": 3, "v": "c", "ver": 1}""")
     drain()
-    val out = spark.read.parquet(dest).orderBy("id")
+    val out = Snapshots.read(spark, dest).orderBy("id")
       .as[(Long, String, Long)].collect().toSeq
     assert(out == Seq((1L, "a", 1L), (2L, "B", 2L), (3L, "c", 1L)))
     // re-draining with no new files is a checkpointed no-op
     drain()
-    assert(spark.read.parquet(dest).count() == 3)
+    assert(Snapshots.versions(spark, dest) == Seq(1L, 2L))
+  }
+
+  test("streaming upsert: a batch replayed after its create committed converges") {
+    val src = TestSpark.tmpDir("upsert-replay-src")
+    val dest = TestSpark.tmpDir("upsert-replay") + "/table"
+    val ckpt = TestSpark.tmpDir("upsert-replay-ckpt")
+    // one batch; id=2 twice within it, the higher ver must win
+    Files.writeString(Paths.get(src, "b1.json"), Seq(
+      """{"id": 1, "v": "a", "ver": 1}""",
+      """{"id": 2, "v": "b", "ver": 2}""",
+      """{"id": 2, "v": "stale", "ver": 1}""").mkString("\n"))
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, v STRING, ver BIGINT")
+    def drain(): Unit = Incremental.upsertStream(
+      spark.readStream.schema(schema).json(src),
+      dest, ckpt, Seq("id"), "ver", "ver").awaitTermination()
+    def table() = Snapshots.read(spark, dest).orderBy("id")
+      .as[(Long, String, Long)].collect().toSeq
+    val once = Seq((1L, "a", 1L), (2L, "b", 2L))
+    drain()
+    assert(Snapshots.versions(spark, dest) == Seq(1L))
+    assert(table() == once)
+    // crash after the create committed, before the checkpoint commit:
+    // without the batch's commit-log entry the restart replays it
+    Seq("0", ".0.crc").foreach(f =>
+      Files.deleteIfExists(Paths.get(ckpt, "commits", f)))
+    drain()
+    assert(Snapshots.versions(spark, dest) == Seq(1L, 2L),
+      "batch 0 was not replayed")
+    assert(table() == once, s"replay must converge: ${table()}")
   }
 
   test("transformWithState running totals match the batch aggregate") {
@@ -1008,21 +1038,25 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("fragmentation + delta append + compaction (ST1-ST3)") {
+    import graft.maintain.Snapshots
     val path = TestSpark.tmpDir("compact") + "/table"
     val df = Tables.orders(spark, TestSpark.sf0001)
-    Compaction.fragment(df, path, nFiles = 20)
-    val frag = Compaction.stats(spark, path)
-    assert(frag.files == 20)
+    def files() = Snapshots.read(spark, path).inputFiles.length
+    Snapshots.create(df.repartition(20), path)
+    assert(files() == 20)
 
-    Compaction.appendDelta(df.limit(5), path)
-    val withDelta = Compaction.stats(spark, path)
-    assert(withDelta.files > frag.files)
-    val rowsBefore = spark.read.parquet(path).count()
+    Snapshots.commitAppend(df.limit(5), path)
+    val withDelta = files()
+    assert(withDelta > 20)
+    val rowsBefore = Snapshots.read(spark, path).count()
 
-    val result = Compaction.compact(spark, path, targetFiles = 3)
-    assert(result.after.files == 3)
-    assert(result.reduction > 0.8)
-    assert(spark.read.parquet(path).count() == rowsBefore)
+    Snapshots.compact(spark, path, targetFiles = 3)
+    assert(files() == 3)
+    assert(1.0 - 3.0 / withDelta > 0.8)
+    assert(Snapshots.read(spark, path).count() == rowsBefore)
+    // the fragmented layout stays readable at its own version
+    assert(Snapshots.readVersion(spark, path, 2L).inputFiles.length
+      == withDelta)
   }
 
   test("snapshot streaming source: batch-CDC parity, exactly-once replay, restart") {

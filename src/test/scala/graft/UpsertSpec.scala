@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.maintain.Upsert
 
 /** MERGE-like upsert: update/insert/keep semantics, deterministic
-  * tie-breaks, schema drift, and the crash-safe path-level swap. */
+  * tie-breaks, schema drift, and the streaming sink over a crashed
+  * first batch. */
 class UpsertSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -62,68 +63,16 @@ class UpsertSpec extends AnyFunSuite {
     }
   }
 
-  test("path-level upsert swaps atomically and survives re-read") {
-    val dir = TestSpark.tmpDir("upsert") + "/t"
-    target.write.parquet(dir)
-    val updates = Seq((3L, "C", 7L), (9L, "i", 1L)).toDF("id", "v", "ver")
-    val (before, after) =
-      Upsert.upsertPath(spark, dir, updates, Seq("id"), "ver", "ver")
-    assert(before == 3 && after == 4)
-    val back = spark.read.parquet(dir).orderBy("id")
-      .as[(Long, String, Long)].collect().toSeq
-    assert(back == Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "C", 7L),
-      (9L, "i", 1L)))
-  }
-
-  private def hadoopFs(path: String) =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-
-  test("crash between swap renames: next upsert restores the backup") {
-    val dir = TestSpark.tmpDir("upsert_crash1") + "/t"
-    target.write.parquet(dir)
-    // simulate a crash after rename(path -> backup): table gone,
-    // backup holds the real data
-    val fs = hadoopFs(dir)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      Upsert.backupPath(dir)))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir)))
-    val updates = Seq((2L, "B", 9L)).toDF("id", "v", "ver")
-    val (before, after) =
-      Upsert.upsertPath(spark, dir, updates, Seq("id"), "ver", "ver")
-    assert(before == 3 && after == 3, "recover must see all prior rows")
-    assert(!fs.exists(Upsert.backupPath(dir)), "backup cleaned up")
-    val back = spark.read.parquet(dir).orderBy("id")
-      .as[(Long, String, Long)].collect().toSeq
-    assert(back == Seq((1L, "a", 1L), (2L, "B", 9L), (3L, "c", 1L)))
-  }
-
-  test("crash before backup delete: stale backup is cleared, not merged") {
-    val dir = TestSpark.tmpDir("upsert_crash2") + "/t"
-    target.write.parquet(dir)
-    // simulate a crash after the swap completed but before the backup
-    // delete: live table at dir, stale older copy at the backup path
-    Seq((1L, "STALE", 0L)).toDF("id", "v", "ver")
-      .write.parquet(Upsert.backupPath(dir).toString)
-    val updates = Seq((9L, "i", 1L)).toDF("id", "v", "ver")
-    val (before, after) =
-      Upsert.upsertPath(spark, dir, updates, Seq("id"), "ver", "ver")
-    assert(before == 3 && after == 4)
-    assert(!hadoopFs(dir).exists(Upsert.backupPath(dir)))
-    val v1 = spark.read.parquet(dir).filter($"id" === 1L)
-      .select("v").as[String].collect().toSeq
-    assert(v1 == Seq("a"), "stale backup content must not resurface")
-  }
-
   test("streaming upsert recovers a table half-created by a crashed batch") {
+    import graft.maintain.Snapshots
     import graft.streaming.Incremental
     val root = TestSpark.tmpDir("upsert_stream_halfcreate")
     val (src, dest, ckpt) = (s"$root/src", s"$root/dest", s"$root/ckpt")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    // simulate a crash during the very first table write: destDir
-    // exists but holds only uncommitted debris, zero data files
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$dest/_temporary/0"))
+    // simulate a crash during the very first batch's create: its data
+    // batch landed under dest but no version was ever committed
+    Seq((1L, "STALE", 9L)).toDF("id", "v", "ver")
+      .write.parquet(s"$dest/data/batch-crashedcreate0")
     Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "v", "ver")
       .coalesce(1).write.json(s"$src/b1")
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -131,39 +80,10 @@ class UpsertSpec extends AnyFunSuite {
     Incremental.upsertStream(
       spark.readStream.schema(schema).json(s"$src/*"),
       dest, ckpt, Seq("id"), "ver", "ver").awaitTermination()
-    val back = spark.read.parquet(dest).orderBy("id")
+    assert(Snapshots.versions(spark, dest) == Seq(1L))
+    val back = Snapshots.read(spark, dest).orderBy("id")
       .as[(Long, String, Long)].collect().toSeq
     assert(back == Seq((1L, "a", 1L), (2L, "b", 1L)),
-      s"half-created dir must be cleared and recreated: $back")
-  }
-
-  test("streaming upsert does not mistake a mid-swap crash for batch one") {
-    import graft.streaming.Incremental
-    val root = TestSpark.tmpDir("upsert_stream_crash")
-    val (src, dest, ckpt) = (s"$root/src", s"$root/dest", s"$root/ckpt")
-    val fs = hadoopFs(dest)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    // batch 1 creates the table
-    Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "v", "ver")
-      .coalesce(1).write.json(s"$src/b1")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "id LONG, v STRING, ver LONG")
-    def drain(): Unit = Incremental.upsertStream(
-      spark.readStream.schema(schema).json(s"$src/*"),
-      dest, ckpt, Seq("id"), "ver", "ver").awaitTermination()
-    drain()
-    assert(spark.read.parquet(dest).count() == 2)
-    // simulate a crash mid-swap: table only at the backup path
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dest),
-      Upsert.backupPath(dest)))
-    // batch 2 arrives; without recovery it would recreate the table
-    // from this single batch and silently drop ids 1 and 2
-    Seq((3L, "c", 1L)).toDF("id", "v", "ver")
-      .coalesce(1).write.json(s"$src/b2")
-    drain()
-    val back = spark.read.parquet(dest).orderBy("id")
-      .as[(Long, String, Long)].collect().toSeq
-    assert(back == Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)),
-      s"mid-swap crash must not shadow prior rows: $back")
+      s"the crashed create's batch must stay invisible: $back")
   }
 }

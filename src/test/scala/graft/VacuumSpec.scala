@@ -1,103 +1,89 @@
 package graft
 
+import java.io.File
+
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.maintain.Vacuum
+import graft.maintain.Snapshots
 
-/** Warehouse-root sweep of swap leftovers: orphan tmp dirs removed,
-  * mid-swap backups restored as their table, stale backups cleared,
-  * healthy tables untouched. */
+/** The `vacuum ROOT` verb: every snapshot table directly under ROOT
+  * loses what crashed commits left behind — data batches no version
+  * references and manifests never claimed — once older than the
+  * in-flight age floor. No version is dropped and nothing else under
+  * ROOT is touched. */
 class VacuumSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** A crashed commit's residue: a written `dir` under `table` that no
+    * version references, aged past the sweep's one-hour floor unless
+    * `old` is false (a commit still in flight). */
+  private def plant(table: String, dir: String, old: Boolean = true): File = {
+    val f = new File(s"$table/$dir")
+    Seq((0L, "orphan")).toDF("id", "v").write.parquet(f.getPath)
+    if (old) f.setLastModified(System.currentTimeMillis() - 2 * 3600 * 1000L)
+    f
+  }
+
+  private def vacuum(root: String): Unit =
+    graft.cli.Main.run(spark, Array("vacuum", root))
+
+  private def rows(table: String): Seq[(Long, String)] =
+    Snapshots.read(spark, table).orderBy("id").as[(Long, String)]
+      .collect().toSeq
+
+  private def listing(root: String): Seq[(String, Long)] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].toFile)
+      .map(f => (f.getPath, if (f.isFile) f.length else -1L)).sorted
+    finally walk.close()
+  }
+
   test("vacuum heals every crash residue class in one sweep") {
     val root = TestSpark.tmpDir("vacuum")
-    def write(name: String, tag: String): Unit =
-      Seq((1L, tag)).toDF("id", "v").write.parquet(s"$root/$name")
-
-    write("t1", "live")
-    write("t1_precompact", "stale") // crash after swap, before delete
-    write("t2_preupsert", "orig")   // crash between renames: no t2
-    write("t3", "live")
-    write("t3_compacting", "half")  // orphan half-written replacement
-    write("t4", "untouched")
-    // a REAL table that merely looks like a tmp dir (no t5 base, no
-    // t5_preupsert backup) — must never be swept
-    write("t5_upserting", "user-data")
-
-    val report = Vacuum.vacuum(spark, root)
-
-    assert(report.removedTmp.map(p => p.split('/').last) == Seq("t3_compacting"))
-    assert(report.recoveredTables.map(_.split('/').last) == Seq("t2"))
-    assert(report.clearedBackups.map(_.split('/').last) == Seq("t1_precompact"))
-
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val left = fs.listStatus(new org.apache.hadoop.fs.Path(root))
-      .map(_.getPath.getName).sorted.toSeq
-    assert(left == Seq("t1", "t2", "t3", "t4", "t5_upserting"))
-    assert(spark.read.parquet(s"$root/t5_upserting").select("v")
-      .as[String].head() == "user-data")
-    // t1 kept the LIVE copy, t2 recovered the original rows
-    assert(spark.read.parquet(s"$root/t1").select("v")
-      .as[String].head() == "live")
-    assert(spark.read.parquet(s"$root/t2").select("v")
-      .as[String].head() == "orig")
+    val (t1, t2) = (s"$root/t1", s"$root/t2")
+    Snapshots.create(Seq((1L, "a")).toDF("id", "v"), t1)
+    Snapshots.commitAppend(Seq((2L, "b")).toDF("id", "v"), t1)
+    Snapshots.create(Seq((3L, "c")).toDF("id", "v"), t2)
+    // crash before the manifest claim: a data batch and no version
+    val batch1 = plant(t1, "data/batch-crashed000000001")
+    val batch2 = plant(t2, "data/batch-crashed000000002")
+    // crash between the manifest write and the claim
+    val manifest = plant(t2, "_snapshots/.tmp-v2-crashed00001")
+    val inFlight = plant(t2, "data/batch-inflight00000003", old = false)
+    val before = (rows(t1), rows(t2))
+    vacuum(root)
+    assert(!batch1.exists && !batch2.exists && !manifest.exists)
+    assert(inFlight.exists, "a commit still in flight lost its batch")
+    assert(Snapshots.versions(spark, t1) == Seq(1L, 2L))
+    assert(Snapshots.versions(spark, t2) == Seq(1L))
+    assert((rows(t1), rows(t2)) == before)
   }
 
   test("a dir named exactly a bare suffix does not derail the sweep") {
     val root = TestSpark.tmpDir("vacuum_bare")
-    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$root/_precompact")
-    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$root/t")
-    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$root/t_compacting")
-    val report = Vacuum.vacuum(spark, root)
-    // the orphan tmp (plausible: base `t` exists) is still cleaned;
-    // the bare-suffix dirs are ignored
-    assert(report.removedTmp.map(_.split('/').last) == Seq("t_compacting"))
-    assert(report.recoveredTables.isEmpty && report.clearedBackups.isEmpty)
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/_precompact")))
-  }
-
-  test("tmp dir whose base is only present as a backup is still swept") {
-    // crash mid-replace: base renamed away to the backup, tmp not yet
-    // renamed in — tmp must be recognized via the backup's presence
-    val root = TestSpark.tmpDir("vacuum_midswap")
-    Seq((1L, "orig")).toDF("id", "v").write.parquet(s"$root/t_prezorder")
-    Seq((1L, "half")).toDF("id", "v").write.parquet(s"$root/t_zordering")
-    val report = Vacuum.vacuum(spark, root)
-    assert(report.removedTmp.map(_.split('/').last) == Seq("t_zordering"))
-    assert(report.recoveredTables.map(_.split('/').last) == Seq("t"))
-    assert(spark.read.parquet(s"$root/t").select("v")
-      .as[String].head() == "orig")
-  }
-
-  test("divergent twin backups: one restored, the other left for review") {
-    val root = TestSpark.tmpDir("vacuum_twins")
-    Seq((1L, "compact-copy")).toDF("id", "v")
-      .write.parquet(s"$root/t_precompact")
-    Seq((1L, "upsert-copy")).toDF("id", "v")
-      .write.parquet(s"$root/t_preupsert")
-    val report = Vacuum.vacuum(spark, root)
-    assert(report.recoveredTables.map(_.split('/').last) == Seq("t"))
-    assert(report.clearedBackups.isEmpty,
-      "the losing divergent copy must NOT be silently deleted")
-    // suffix order is deterministic: _precompact wins
-    assert(spark.read.parquet(s"$root/t").select("v")
-      .as[String].head() == "compact-copy")
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/t_preupsert")),
-      "diverging backup left in place")
+    // plain directories, not snapshot tables: never touched
+    Seq((7L, "keep")).toDF("id", "v").write.parquet(s"$root/_preupsert")
+    Seq((8L, "keep")).toDF("id", "v").write.parquet(s"$root/_compacting")
+    Snapshots.create(Seq((1L, "a")).toDF("id", "v"), s"$root/t")
+    val batch = plant(s"$root/t", "data/batch-crashed000000001")
+    vacuum(root)
+    assert(!batch.exists, "the sweep stopped before the snapshot table")
+    assert(spark.read.parquet(s"$root/_preupsert").as[(Long, String)]
+      .collect().toSeq == Seq((7L, "keep")))
+    assert(spark.read.parquet(s"$root/_compacting").as[(Long, String)]
+      .collect().toSeq == Seq((8L, "keep")))
+    assert(rows(s"$root/t") == Seq((1L, "a")))
   }
 
   test("vacuum on a clean root is a no-op") {
     val root = TestSpark.tmpDir("vacuum_clean")
-    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$root/t")
-    val report = Vacuum.vacuum(spark, root)
-    assert(report.removedTmp.isEmpty && report.recoveredTables.isEmpty &&
-      report.clearedBackups.isEmpty)
+    Snapshots.create(Seq((1L, "a")).toDF("id", "v"), s"$root/t")
+    Snapshots.compact(spark, s"$root/t", targetFiles = 1)
+    Seq((2L, "b")).toDF("id", "v").write.parquet(s"$root/plain")
+    val before = listing(root)
+    vacuum(root)
+    assert(listing(root) == before)
+    assert(Snapshots.versions(spark, s"$root/t") == Seq(1L, 2L))
   }
 }
