@@ -521,8 +521,8 @@ object Dedup {
     *                       bucket it by id for file pruning
     *                       ([[graft.maintain.Layout]] provides that).
     *
-    * The reference is shingled ONCE (persisted) and feeds both the
-    * bands and shingles writes. */
+    * The tables come from [[writeLshTables]], which the append
+    * shares. */
   def writeLshIndex(
       reference: DataFrame,
       path: String,
@@ -534,65 +534,16 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = reference.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    // invalidate an OLD index at this path first (meta is the validity
-    // marker) so a crash mid-rebuild reads as absent, not as stale
-    // meta over half-rebuilt tables
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val mfs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (mfs.exists(metaPath) && !mfs.delete(metaPath, true))
-      throw new graft.maintain.Swap.SwapFailedException(
-        s"could not clear stale meta at $metaPath")
-    // scale-adaptive segment shaping: the big passthrough tables
-    // (shingles/bands, ≈ text-sized) coalesce — never a shuffle; the
-    // AGGREGATE-fed small tables (digests/bucket_counts) repartition
-    // instead, because a coalesce placed after distinct()/groupBy
-    // collapses that aggregation's reduce stage to nSmall tasks
-    // (often 1) — file sizing must not serialize the aggregation
-    // (ADVICE r18; guide §2.2). The extra exchange moves only the
-    // already-aggregated small result.
-    val nShards = graft.maintain.Segments.shardCount(
-      reference.select(col(idCol), col(textCol)))
-    val nSmall = math.max(1, nShards / 16)
-    graft.maintain.Segments.writeBase(
-      reference.select(contentHash(col(textCol)).as("digest")).distinct()
-        .repartition(nSmall),
-      s"$path/digests")
-    val (sh, handle) = persistIfNew(
-      reference.select(
-        col(idCol).as("id"), shingles(col(textCol), shingleK).as("sh")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // bucket sizes are precomputed AT BUILD: every probe needs the
-      // bucket-cap filter, and computing them here means a probe never
-      // re-tokenizes or re-hashes the reference. The counts live in
-      // their own `bucket_counts` table, one count per (segment,
-      // bucket) — associative, so appends stay exact — and the probe
-      // reads only the OVERSIZED buckets (sum over segments > cap) —
-      // tiny by nature (boilerplate families) — as a broadcast
-      // anti-join set
-      val bandRows = persistIfNew(
-        sh.select(col("id"),
-          posexplode(graft.functions.TextExprs.minhash_bands(
-            col("sh"), numHashes, bands)).as(Seq("band", "band_hash"))),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        graft.maintain.Segments.writeBase(
-          bandRows._1.coalesce(nShards), s"$path/bands")
-        graft.maintain.Segments.writeBase(
-          bandRows._1.groupBy("band", "band_hash")
-            .agg(count(lit(1)).as("n")).repartition(nSmall),
-          s"$path/bucket_counts")
-      } finally release(bandRows._2.toSeq)
-      graft.maintain.Segments.writeBase(
-        sh.coalesce(nShards), s"$path/shingles")
-    } finally release(handle.toSeq)
-    // meta LAST: its _SUCCESS is the index's validity marker
-    spark.range(1).select(
-        lit(LshIndexFormat).as("format"),
-        lit(shingleK).as("shingle_k"),
-        lit(numHashes).as("num_hashes"),
-        lit(bands).as("bands"))
-      .write.mode("overwrite").parquet(s"$path/meta")
+    graft.maintain.Segments.clearMeta(spark, path)
+    writeLshTables(reference, idCol, textCol, shingleK, numHashes, bands,
+        graft.maintain.Segments.shardCount) { (table, df) =>
+      graft.maintain.Segments.writeBase(df, s"$path/$table")
+    }
+    graft.maintain.Segments.writeMeta(spark, path,
+      lit(LshIndexFormat).as("format"),
+      lit(shingleK).as("shingle_k"),
+      lit(numHashes).as("num_hashes"),
+      lit(bands).as("bands"))
   }
 
   /** Incremental index maintenance: fold NEW reference documents
@@ -636,21 +587,54 @@ object Dedup {
     val shingleK = meta.getAs[Int]("shingle_k")
     val numHashes = meta.getAs[Int]("num_hashes")
     val bands = meta.getAs[Int]("bands")
-    val sized = newReference.select(col(idCol), col(textCol))
-    val nShards = graft.maintain.Segments.shardCount(sized)
-    val nSmall = math.max(1, nShards / 16)
-    // parallel-encode floor for the big passthrough tables: at one
-    // shard, coalesce(1) made the bands write compute the whole
-    // minhash serially and the shingles write encode serially —
-    // see Segments.appendWriteTasks
-    val nWrite = graft.maintain.Segments.appendWriteTasks(sized)
-    graft.maintain.Segments.writeSegment(
-      newReference
-        .select(contentHash(col(textCol)).as("digest")).distinct()
-        .repartition(nSmall),
-      s"$path/digests", segId)
+    writeLshTables(newReference, idCol, textCol, shingleK, numHashes,
+        bands, graft.maintain.Segments.appendWriteTasks) { (table, df) =>
+      graft.maintain.Segments.writeSegment(df, s"$path/$table", segId)
+    }
+  }
+
+  /** The LSH index's four segment tables derived from `reference`,
+    * each handed to `write(table, frame)` in a fixed order — digests,
+    * bands, bucket_counts, shingles — the ONE derivation the build
+    * ([[writeLshIndex]], `writeBase`) and the append
+    * ([[appendToLshIndex]], `writeSegment`) share. The reference is
+    * shingled ONCE (persisted) and feeds both the bands and shingles
+    * writes.
+    *
+    * Segment shaping: the big passthrough tables (shingles/bands,
+    * ≈ text-sized) coalesce to `bigTasks(sized)` — never a shuffle;
+    * a build passes [[graft.maintain.Segments.shardCount]], an append
+    * [[graft.maintain.Segments.appendWriteTasks]] (its parallel-encode
+    * floor: at one shard, coalesce(1) made the bands write compute
+    * the whole minhash serially). The AGGREGATE-fed small tables
+    * (digests/bucket_counts) repartition instead, because a coalesce
+    * placed after distinct()/groupBy collapses that aggregation's
+    * reduce stage to nSmall tasks (often 1) — file sizing must not
+    * serialize the aggregation (ADVICE r18; guide §2.2). The extra
+    * exchange moves only the already-aggregated small result.
+    *
+    * Bucket sizes are precomputed here so a probe never re-tokenizes
+    * or re-hashes the reference: one count per (segment, bucket) —
+    * associative, so appends stay exact — and the probe reads only
+    * the OVERSIZED buckets (sum over segments > cap), tiny by nature
+    * (boilerplate families), as a broadcast anti-join set. */
+  private def writeLshTables(
+      reference: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleK: Int,
+      numHashes: Int,
+      bands: Int,
+      bigTasks: DataFrame => Int)(
+      write: (String, DataFrame) => Unit): Unit = {
+    val sized = reference.select(col(idCol), col(textCol))
+    val nSmall = math.max(1, graft.maintain.Segments.shardCount(sized) / 16)
+    val nBig = bigTasks(sized)
+    write("digests",
+      reference.select(contentHash(col(textCol)).as("digest")).distinct()
+        .repartition(nSmall))
     val (sh, handle) = persistIfNew(
-      newReference.select(
+      reference.select(
         col(idCol).as("id"), shingles(col(textCol), shingleK).as("sh")),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -660,15 +644,12 @@ object Dedup {
             col("sh"), numHashes, bands)).as(Seq("band", "band_hash"))),
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        graft.maintain.Segments.writeSegment(
-          bandRows._1.coalesce(nWrite), s"$path/bands", segId)
-        graft.maintain.Segments.writeSegment(
+        write("bands", bandRows._1.coalesce(nBig))
+        write("bucket_counts",
           bandRows._1.groupBy("band", "band_hash")
-            .agg(count(lit(1)).as("n")).repartition(nSmall),
-          s"$path/bucket_counts", segId)
+            .agg(count(lit(1)).as("n")).repartition(nSmall))
       } finally release(bandRows._2.toSeq)
-      graft.maintain.Segments.writeSegment(
-        sh.coalesce(nWrite), s"$path/shingles", segId)
+      write("shingles", sh.coalesce(nBig))
     } finally release(handle.toSeq)
   }
 

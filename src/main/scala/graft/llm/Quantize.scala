@@ -236,10 +236,7 @@ object Quantize {
     codes
       .crossJoin(broadcast(dtabDf))
       .select(col(idCol),
-        round(aggregate(
-          zip_with(col("__graft_dtab"), col("codes"),
-            (row, code) => element_at(row, code + 1)),
-          lit(0.0), (acc, e) => acc + e), 4).as("adc_dist"))
+        Similarity.adcDist(col("__graft_dtab"), col("codes")).as("adc_dist"))
       .orderBy(col("adc_dist"), col(idCol))
       .limit(topK)
   }
@@ -315,8 +312,9 @@ object Quantize {
     * one call so the whole path stays oracle-checkable end to end.
     *
     * Determinism contract (all engine-reproducible in SQL):
-    * training/probing as [[Similarity.ivfTrainedTopK]] (round-6
-    * cosine, lower list id ties), codes as [[pqCodes]] (round-6
+    * training as [[Similarity.ivfTrainedTopK]], probing as
+    * [[Similarity.probeLists]] (round-6 cosine, lower list id ties),
+    * codes as [[pqCodes]] (round-6
     * squared-L2 argmin, lower code ties, codebook = `k` lowest-id
     * vectors of the FULL corpus), ADC as [[pqTopK]] (round-6 table
     * entries, round-4 sum, `(dist ASC, id ASC)` order).
@@ -351,19 +349,8 @@ object Quantize {
         lit(null).cast("double").as("adc_dist")).limit(0)
     val q = typedLit(queryVec.toSeq)
     val sub = queryVec.length / m
-    // probe ranking runs in-plan on the nlist-row centroid frame so
-    // the round-6 cosine is the ENGINE's arithmetic, not the driver's
-    val centDf = embs.sparkSession.range(1)
-      .select(explode(array(cents.map { case (cid, c) =>
-        struct(lit(cid).as("list_id"), typedlit(c).as("c_vec"))
-      }: _*)).as("c"))
-      .select(col("c.list_id").as("list_id"), col("c.c_vec").as("c_vec"))
-    val probeLists = centDf
-      .select(col("list_id"),
-        round(Similarity.cosine(col("c_vec"), q), 6).as("qc"))
-      .orderBy(col("qc").desc, col("list_id"))
-      .limit(nprobe)
-      .select("list_id")
+    val probed = Similarity.probeLists(
+      Similarity.centroidFrame(embs.sparkSession, cents), q, nprobe)
     val cb = codebook(checked, k, idCol, vecCol)
     // dtab[s][c] = round₆‖q_sub(s) − cb[c]_sub(s)‖² is query-constant:
     // derived ONCE on the one-row codebook frame and broadcast as a
@@ -379,14 +366,11 @@ object Quantize {
     val codesExpr = pqArgminCodes(col("v"), col("cb"), m, lit(sub))
     Similarity.assignToCentroids(vecs, cents)
       .filter(col("vid") =!= lit(excludeId))
-      .join(broadcast(probeLists), col("cid") === col("list_id"))
+      .join(broadcast(probed), col("cid") === col("list_id"))
       .crossJoin(broadcast(cb))
       .crossJoin(broadcast(dtabDf))
       .select(col("vid").as(idCol),
-        round(aggregate(
-          zip_with(col("__graft_dtab"), codesExpr,
-            (row, code) => element_at(row, code + 1)),
-          lit(0.0), (acc, e) => acc + e), 4).as("adc_dist"))
+        Similarity.adcDist(col("__graft_dtab"), codesExpr).as("adc_dist"))
       .orderBy(col("adc_dist"), col(idCol))
       .limit(topK)
   }
@@ -453,23 +437,15 @@ object Quantize {
     require(m >= 1, s"m must be ≥ 1: $m")
     require(k >= 1, s"k must be ≥ 1: $k")
     val spark = embs.sparkSession
-    // invalidate an OLD index at this path first: with meta (the
-    // validity marker) gone, a crash mid-rebuild reads as "no index"
-    // instead of stale-meta-over-new-halves
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val mfs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (mfs.exists(metaPath) && !mfs.delete(metaPath, true))
-      throw new graft.maintain.Swap.SwapFailedException(
-        s"could not clear stale meta at $metaPath")
+    graft.maintain.Segments.clearMeta(spark, path)
     def writeMeta(dim: Int): Unit =
-      spark.range(1).select(
-          lit(PqIndexFormat).as("format"),
-          lit(nlist).as("nlist"),
-          lit(iters).as("iters"),
-          lit(m).as("m"),
-          lit(k).as("k"),
-          lit(dim).as("dim"))
-        .write.mode("overwrite").parquet(s"$path/meta")
+      graft.maintain.Segments.writeMeta(spark, path,
+        lit(PqIndexFormat).as("format"),
+        lit(nlist).as("nlist"),
+        lit(iters).as("iters"),
+        lit(m).as("m"),
+        lit(k).as("k"),
+        lit(dim).as("dim"))
     val vecs = Similarity.doubleVecs(embs, idCol, vecCol)
     val cents = Similarity.lloydCentroids(vecs, nlist, iters)
     if (cents.isEmpty) {
@@ -492,11 +468,7 @@ object Quantize {
     }
     val dim = cents.head._2.length
     require(dim % m == 0, s"dim $dim must be divisible by m=$m")
-    spark.range(1)
-      .select(explode(array(cents.map { case (cid, c) =>
-        struct(lit(cid).as("list_id"), typedlit(c).as("c_vec"))
-      }: _*)).as("c"))
-      .select(col("c.list_id").as("list_id"), col("c.c_vec").as("c_vec"))
+    Similarity.centroidFrame(spark, cents)
       .write.mode("overwrite").parquet(s"$path/centroids")
     val cb = codebook(embs, k, idCol, vecCol)
     cb.select(posexplode(col("cb")).as(Seq("ci", "e")))
@@ -652,7 +624,7 @@ object Quantize {
     // the stored codebook enters as a plan literal in ci order —
     // positions must match the stored codes. The m×k table is
     // query-constant, so it is derived ONCE on a one-row broadcast
-    // frame (ivfPqKnnJoinIndexed's qTabs pattern): in zip_with
+    // frame and scored through Similarity.adcDist: in zip_with
     // argument position the expression still re-derived the whole
     // table PER SCORED ROW — m·k interpreted sqDists over dim/m-wide
     // slices, measured ~0.2 ms/row = 10.9 s over the 5·10⁴-row x100
@@ -665,24 +637,15 @@ object Quantize {
     val codes = nprobe match {
       case Some(np) =>
         require(np >= 1, s"nprobe must be ≥ 1: $np")
-        // probe ranking runs in-plan on the stored nlist-row centroid
-        // table — the round-6 cosine is the ENGINE's arithmetic
-        val probeLists = spark.read.parquet(s"$indexPath/centroids")
-          .select(col("list_id"),
-            round(Similarity.cosine(col("c_vec"), q), 6).as("qc"))
-          .orderBy(col("qc").desc, col("list_id"))
-          .limit(np)
-          .select("list_id")
-        codes0.join(broadcast(probeLists), col("cid") === col("list_id"))
+        val probed = Similarity.probeLists(
+          spark.read.parquet(s"$indexPath/centroids"), q, np)
+        codes0.join(broadcast(probed), col("cid") === col("list_id"))
       case None => codes0
     }
     codes
       .crossJoin(broadcast(dtabDf))
       .select(col("id").as(idCol),
-        round(aggregate(
-          zip_with(col("__graft_dtab"), col("codes"),
-            (row, code) => element_at(row, code + 1)),
-          lit(0.0), (acc, e) => acc + e), 4).as("adc_dist"))
+        Similarity.adcDist(col("__graft_dtab"), col("codes")).as("adc_dist"))
       .orderBy(col("adc_dist"), col(idCol))
       .limit(topK)
   }
@@ -743,14 +706,14 @@ object Quantize {
     * float corpus vectors are read at all.
     *
     * Plan shape: the stored centroid table (nlist rows) ranks each
-    * query's probes in-plan (a window over the bounded nq×nlist
-    * frame — the engine's arithmetic, round-6 cosine, lower list id
-    * ties); each query's m×k ADC distance table is derived ONCE on
-    * the nq-row query frame and rides the broadcast (query, probed
-    * list) pairs into the stored code table; per-row scoring is `m`
-    * array lookups ([[pqTopK]]'s exact zip_with shape); per-query
-    * top-k is the bounded `collect_top_k` heap — ≤ k rows per
-    * (query, map task) cross the exchange, never the scored pairs.
+    * query's probes in-plan ([[Similarity.probeLists]]' batch form);
+    * each query's m×k ADC distance table is derived ONCE on the
+    * nq-row query frame and rides the broadcast (query, probed list)
+    * pairs into the stored code table; per-row scoring is `m` array
+    * lookups ([[Similarity.adcDist]]); per-query top-k is
+    * [[Similarity.perQueryTopK]]'s bounded heap, ascending — ≤ k rows
+    * per (query, map task) cross the exchange, never the scored
+    * pairs.
     *
     * Output: `(queryIdCol, idCol, adc_dist, rank)`, rank by
     * `(adc_dist ASC, id ASC)` within each query — a row-level oracle
@@ -767,8 +730,6 @@ object Quantize {
       queryVecCol: String = "q_vec",
       idCol: String = "vec_id",
       excludeSelf: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.TopKAgg
     require(k > 0, s"k must be positive: $k")
     require(nprobe >= 1, s"nprobe must be ≥ 1: $nprobe")
     require(pqIndexExists(spark, indexPath),
@@ -790,49 +751,26 @@ object Quantize {
             lit(s"query dim != index dim $storedDim for id "),
             col("__graft_qid").cast("string")))).as("__graft_qv"))
     // per-query ADC distance table, derived ONCE on the nq-row query
-    // frame from the stored codebook literal (adcTopKIndexed's exact
-    // round-6 arithmetic); sub is resolved per row from the checked
-    // query length, so it equals storedDim/m
+    // frame from the stored codebook literal (adcTable's round-6
+    // arithmetic); sub is resolved per row from the checked query
+    // length, so it equals storedDim/m
     val cbLit = readCodebookLiteral(spark, indexPath)
     val sub = size(col("__graft_qv")) / m
     val dtab = adcTable(col("__graft_qv"), cbLit, m, sub)
     val qTabs = qChecked.select(
       col("__graft_qid"), col("__graft_qv"), dtab.as("__graft_dtab"))
-    // probe ranking in-plan on the stored nlist-row centroid table —
-    // a window over the bounded nq×nlist frame, never the corpus
-    val probeSet = spark.read.parquet(s"$indexPath/centroids")
-      .crossJoin(broadcast(qTabs))
-      .select(col("__graft_qid"), col("__graft_dtab"), col("list_id"),
-        round(Similarity.cosine(col("c_vec"), col("__graft_qv")), 6)
-          .as("qc"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("__graft_qid")
-          .orderBy(col("qc").desc, col("list_id"))))
-      .filter(col("rk") <= nprobe)
-      .select("__graft_qid", "__graft_dtab", "list_id")
+    val probeSet = Similarity.probeLists(
+      spark.read.parquet(s"$indexPath/centroids"), qTabs,
+      "__graft_qid", "__graft_qv", nprobe, carry = Seq("__graft_dtab"))
     val joined = spark.read.parquet(s"$indexPath/codes")
       .join(broadcast(probeSet), col("cid") === col("list_id"))
     val scored = (if (excludeSelf)
         joined.filter(col("id") =!= col("__graft_qid"))
       else joined)
-      .select(col("__graft_qid"), col("id"),
-        round(aggregate(
-          zip_with(col("__graft_dtab"), col("codes"),
-            (row, code) => element_at(row, code + 1)),
-          lit(0.0), (acc, e) => acc + e), 4).as("adc_dist"))
-    scored
-      .groupBy("__graft_qid")
-      .agg(TopKAgg.collect_top_k(
-        struct(col("adc_dist"), col("id").as("nbr")),
-        k, reverse = true).as("top"))
-      .select(col("__graft_qid"), explode(col("top")).as("e"))
-      .select(
-        col("__graft_qid").as(queryIdCol),
-        col("e.nbr").as(idCol),
-        col("e.adc_dist").as("adc_dist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(queryIdCol)
-          .orderBy(col("adc_dist"), col(idCol))))
+      .select(col("__graft_qid").as(queryIdCol), col("id").as(idCol),
+        Similarity.adcDist(col("__graft_dtab"), col("codes")).as("adc_dist"))
+    Similarity.perQueryTopK(scored, queryIdCol, idCol, "adc_dist", k,
+      descending = false)
       .filter(col("rank") <= k)
   }
 

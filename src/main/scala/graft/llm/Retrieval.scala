@@ -38,15 +38,8 @@ object Retrieval {
       textCol: String = "text"): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(k1 >= 0 && b >= 0 && b <= 1, s"bad BM25 params k1=$k1 b=$b")
-    val toks = TextAnalysis.tokens(lower(coalesce(col(textCol), lit(""))))
-    val withLen = docs
-      .select(col(idCol), toks.as("__graft_toks"))
-      .select(col(idCol), col("__graft_toks"),
-        size(col("__graft_toks")).cast("long").as("dl"))
-    val stats = withLen.agg(
-      count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1)).cast("double"))
-        .as("avgdl"))
+    val withLen = docTokens(docs, idCol, textCol)
+    val stats = corpusStats(withLen)
     val tf = withLen
       .select(col(idCol), col("dl"),
         explode(col("__graft_toks")).as("token"))
@@ -57,6 +50,20 @@ object Retrieval {
     tf
       .join(broadcast(dfreq), Seq("token"))
       .crossJoin(broadcast(stats))
+      .transform(withTermScore(k1, b))
+      .groupBy(col(idCol))
+      .agg(
+        count(lit(1)).as("n_terms_hit"),
+        round(sum(col("term_score")), 4).as("bm25"))
+  }
+
+  /** The Lucene-flavored BM25 arithmetic, one definition for the live,
+    * batch and indexed scorers: `idf` and `term_score` columns over a
+    * frame carrying `(tf, dl, df, n_docs, avgdl)`. Every scorer then
+    * sums `term_score` per (query,) document and rounds to 4. */
+  private def withTermScore(k1: Double, b: Double)(
+      df: DataFrame): DataFrame =
+    df
       .withColumn("idf",
         log(lit(1.0) +
           (col("n_docs").cast("double") - col("df").cast("double") +
@@ -67,11 +74,14 @@ object Retrieval {
           (col("tf").cast("double") +
             lit(k1) * (lit(1.0 - b) +
               lit(b) * col("dl").cast("double") / col("avgdl"))))
-      .groupBy(col(idCol))
-      .agg(
-        count(lit(1)).as("n_terms_hit"),
-        round(sum(col("term_score")), 4).as("bm25"))
-  }
+
+  /** Live corpus statistics of a [[docTokens]] frame: one row
+    * `(n_docs, avgdl)`. */
+  private def corpusStats(withLen: DataFrame): DataFrame =
+    withLen.agg(
+      count(lit(1)).as("n_docs"),
+      (sum(col("dl")).cast("double") / count(lit(1)).cast("double"))
+        .as("avgdl"))
 
   /** Deterministic hash-bucket embedding: lowercased whitespace
     * tokens hashed into `dims` count buckets (`v[j] = #{t :
@@ -208,45 +218,13 @@ object Retrieval {
       idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    // a rebuild-in-place must first invalidate the OLD index: meta is
-    // the validity marker, so with it gone a crash mid-build reads as
-    // "no index" instead of old-meta-over-new-halves
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(metaPath) && !fs.delete(metaPath, true))
-      throw new graft.maintain.Swap.SwapFailedException(
-        s"could not clear stale meta at $metaPath")
-    val toks = TextAnalysis.tokens(lower(coalesce(col(textCol), lit(""))))
-    // shard count from the scan-backed input (postings bytes ≈ the
-    // tokenized text bytes), sized BEFORE the checkpoint below — a
-    // checkpointed plan's estimate is not scan-derived
-    val nShards = graft.maintain.Segments.shardCount(
-      docs.select(col(idCol), col(textCol)))
-    val withLen = docs
-      .select(col(idCol).as("id"), toks.as("__graft_toks"))
-      .select(col("id"), col("__graft_toks"),
-        size(col("__graft_toks")).cast("long").as("dl"))
-      .localCheckpoint(true) // feeds stats AND postings: one tokenize
-    graft.maintain.Segments.writeBase(
-      withLen.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("total_dl")),
-      s"$path/stats")
-    val postings = withLen
-      .select(col("id"), col("dl"),
-        explode(col("__graft_toks")).as("token"))
-      .groupBy(col("token"), col("id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-    graft.maintain.Segments.writeBase(
-      postings.repartitionByRange(nShards, col("token"))
-        .sortWithinPartitions("token"),
-      s"$path/postings")
-    graft.maintain.Segments.writeBase(
-      postings.groupBy("token").agg(count(lit(1)).as("df"))
-        .repartitionByRange(math.max(1, nShards / 16), col("token"))
-        .sortWithinPartitions("token"),
-      s"$path/df")
-    spark.range(1).select(lit(Bm25IndexFormat).as("format"))
-      .write.mode("overwrite").parquet(s"$path/meta")
+    graft.maintain.Segments.clearMeta(spark, path)
+    writeBm25Tables(docs, idCol, textCol,
+        graft.maintain.Segments.shardCount) { (table, df) =>
+      graft.maintain.Segments.writeBase(df, s"$path/$table")
+    }
+    graft.maintain.Segments.writeMeta(spark, path,
+      lit(Bm25IndexFormat).as("format"))
   }
 
   /** Incremental index maintenance: fold a batch of NEW documents
@@ -278,37 +256,56 @@ object Retrieval {
     val spark = newDocs.sparkSession
     require(bm25IndexExists(spark, path),
       s"no BM25 index at $path — writeBm25Index first")
-    val toks = TextAnalysis.tokens(lower(coalesce(col(textCol), lit(""))))
-    val sized = newDocs.select(col(idCol), col(textCol))
+    writeBm25Tables(newDocs, idCol, textCol,
+        graft.maintain.Segments.appendWriteTasks) { (table, df) =>
+      graft.maintain.Segments.writeSegment(df, s"$path/$table", segId)
+    }
+  }
+
+  /** The BM25 index's three segment tables derived from `docs`, each
+    * handed to `write(table, frame)` in a fixed order — postings, df,
+    * stats — the ONE derivation the build ([[writeBm25Index]],
+    * `writeBase`) and the append ([[appendToBm25Index]],
+    * `writeSegment`) share. The token frame is tokenized once and the
+    * postings aggregated once: both are checkpointed, since postings
+    * feed their own write AND the df table, and the token frame feeds
+    * postings AND stats. Write tasks: the postings range-write takes
+    * `postingsTasks(sized)` — [[graft.maintain.Segments.shardCount]]
+    * for a build, [[graft.maintain.Segments.appendWriteTasks]] (the
+    * parallel-encode floor; at one shard the append's postings write
+    * was a single task) for an append — and the df table a sixteenth
+    * of the shard count. Both are sized from the scan-backed input
+    * (postings bytes ≈ the tokenized text bytes) BEFORE the
+    * checkpoints, whose estimates are not scan-derived. */
+  private def writeBm25Tables(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      postingsTasks: DataFrame => Int)(
+      write: (String, DataFrame) => Unit): Unit = {
+    val sized = docs.select(col(idCol), col(textCol))
     val nShards = graft.maintain.Segments.shardCount(sized)
-    // parallel-encode floor for the append's big table (the postings
-    // range-write was a single task at one shard — see appendWriteTasks)
-    val nWrite = graft.maintain.Segments.appendWriteTasks(sized)
-    val withLen = newDocs
-      .select(col(idCol).as("id"), toks.as("__graft_toks"))
-      .select(col("id"), col("__graft_toks"),
-        size(col("__graft_toks")).cast("long").as("dl"))
+    val nPostings = postingsTasks(sized)
+    val withLen = docTokens(docs, idCol, textCol)
+      .withColumnRenamed(idCol, "id")
       .localCheckpoint(true)
     val postings = withLen
       .select(col("id"), col("dl"),
         explode(col("__graft_toks")).as("token"))
       .groupBy(col("token"), col("id"), col("dl"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true) // feeds the append AND the df delta
-    graft.maintain.Segments.writeSegment(
-      postings.repartitionByRange(nWrite, col("token"))
-        .sortWithinPartitions("token"),
-      s"$path/postings", segId)
-    graft.maintain.Segments.writeSegment(
+      .localCheckpoint(true)
+    write("postings",
+      postings.repartitionByRange(nPostings, col("token"))
+        .sortWithinPartitions("token"))
+    write("df",
       postings.groupBy("token").agg(count(lit(1)).as("df"))
         .repartitionByRange(math.max(1, nShards / 16), col("token"))
-        .sortWithinPartitions("token"),
-      s"$path/df", segId)
-    graft.maintain.Segments.writeSegment(
+        .sortWithinPartitions("token"))
+    write("stats",
       withLen.agg(
         count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("total_dl")),
-      s"$path/stats", segId)
+        coalesce(sum(col("dl")), lit(0L)).as("total_dl")))
   }
 
   /** Compact an appended index back to the canonical single-segment
@@ -370,16 +367,7 @@ object Retrieval {
       .join(broadcast(dfreq), Seq("token"))
       .withColumn("n_docs", stats._1)
       .withColumn("avgdl", stats._2)
-      .withColumn("idf",
-        log(lit(1.0) +
-          (col("n_docs").cast("double") - col("df").cast("double") +
-            lit(0.5)) /
-          (col("df").cast("double") + lit(0.5))))
-      .withColumn("term_score",
-        col("idf") * (col("tf").cast("double") * lit(k1 + 1.0)) /
-          (col("tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) +
-              lit(b) * col("dl").cast("double") / col("avgdl"))))
+      .transform(withTermScore(k1, b))
       .groupBy(col("id"))
       .agg(
         count(lit(1)).as("n_terms_hit"),
@@ -404,9 +392,11 @@ object Retrieval {
           lower(coalesce(col(queryTextCol), lit(""))))).as("token"))
       .distinct()
 
-  /** The shared per-doc token frame both hybrid sides derive from:
-    * `(idCol, __graft_toks, dl)`. One tokenize DEFINITION — the
-    * lexical branch explodes it, the dense branch hashes it — though
+  /** The shared per-doc token frame every corpus-side path derives
+    * from — the scan-time scorer, the BM25 index tables and both
+    * hybrid sides: `(idCol, __graft_toks, dl)`. One tokenize
+    * DEFINITION — the lexical branch explodes it, the dense branch
+    * hashes it — though
     * physically each branch plans its own column-pruned (id, text)
     * scan with the tokenizer fused in: at corpus scale two pruned
     * scans beat materializing the token arrays. */
@@ -433,10 +423,7 @@ object Retrieval {
       b: Double,
       idCol: String,
       queryIdCol: String): DataFrame = {
-    val stats = withLen.agg(
-      count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1)).cast("double"))
-        .as("avgdl"))
+    val stats = corpusStats(withLen)
     val terms = qTerms.select("token").distinct()
     val tf = withLen
       .select(col(idCol), col("dl"),
@@ -448,16 +435,7 @@ object Retrieval {
     tf
       .join(broadcast(dfreq), Seq("token"))
       .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) +
-          (col("n_docs").cast("double") - col("df").cast("double") +
-            lit(0.5)) /
-          (col("df").cast("double") + lit(0.5))))
-      .withColumn("term_score",
-        col("idf") * (col("tf").cast("double") * lit(k1 + 1.0)) /
-          (col("tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) +
-              lit(b) * col("dl").cast("double") / col("avgdl"))))
+      .transform(withTermScore(k1, b))
       .join(broadcast(qTerms), Seq("token"))
       .groupBy(col(queryIdCol), col(idCol))
       .agg(round(sum(col("term_score")), 4).as("bm25"))
@@ -533,16 +511,7 @@ object Retrieval {
       .join(broadcast(dfreq), Seq("token"))
       .withColumn("n_docs", stats._1)
       .withColumn("avgdl", stats._2)
-      .withColumn("idf",
-        log(lit(1.0) +
-          (col("n_docs").cast("double") - col("df").cast("double") +
-            lit(0.5)) /
-          (col("df").cast("double") + lit(0.5))))
-      .withColumn("term_score",
-        col("idf") * (col("tf").cast("double") * lit(k1 + 1.0)) /
-          (col("tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) +
-              lit(b) * col("dl").cast("double") / col("avgdl"))))
+      .transform(withTermScore(k1, b))
       .join(broadcast(qTerms), Seq("token"))
       .groupBy(col(queryIdCol), col("id"))
       .agg(round(sum(col("term_score")), 4).as("bm25"))
@@ -612,11 +581,7 @@ object Retrieval {
     require(dims > 0, s"dims must be positive: $dims")
     val spark = docs.sparkSession
     GraftFunctions.register(spark)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(metaPath) && !fs.delete(metaPath, true))
-      throw new graft.maintain.Swap.SwapFailedException(
-        s"could not clear stale meta at $metaPath")
+    graft.maintain.Segments.clearMeta(spark, path)
     // one frame for both the shard sizing and the write: building the
     // projection twice cost a second full analysis/optimization pass
     // (planning-only, but not free once the corpus plan is large)
@@ -627,9 +592,8 @@ object Retrieval {
           graft.maintain.Segments.shardCount(vecs), col("id"))
         .sortWithinPartitions("id"),
       s"$path/vectors")
-    spark.range(1)
-      .select(lit(DenseIndexFormat).as("format"), lit(dims).as("dims"))
-      .write.mode("overwrite").parquet(s"$path/meta")
+    graft.maintain.Segments.writeMeta(spark, path,
+      lit(DenseIndexFormat).as("format"), lit(dims).as("dims"))
   }
 
   /** The one vector definition the build, append and live paths
@@ -712,10 +676,10 @@ object Retrieval {
   }
 
   /** Reciprocal-rank fusion of two scored sides. Each side keeps its
-    * per-query top `nPerSide` through the bounded `collect_top_k`
-    * heap (≤ nPerSide rows per (query, map task) cross the exchange —
-    * never the scored frame) and ranks the survivors with a window
-    * over the ≤ nPerSide-row per-query frame; the sides then
+    * per-query top `nPerSide`, ranked, through
+    * [[Similarity.perQueryTopK]]'s bounded heap (≤ nPerSide rows per
+    * (query, map task) cross the exchange — never the scored frame);
+    * the sides then
     * full-outer join on (query, doc) and fuse as
     * `Σ 1/(rrfK + rank)` (a side that missed a doc contributes 0) —
     * rank-based, so no score normalization across heterogeneous
@@ -731,21 +695,11 @@ object Retrieval {
       queryIdCol: String,
       idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.TopKAgg
     def sideRanks(scored: DataFrame, scoreCol: String,
         rankName: String): DataFrame =
-      scored
-        .groupBy(col(queryIdCol))
-        .agg(TopKAgg.collect_top_k(
-          struct((-col(scoreCol)).as("ns"), col(idCol).as("i")),
-          nPerSide, reverse = true).as("top"))
-        .select(col(queryIdCol), explode(col("top")).as("e"))
-        .select(col(queryIdCol), col("e.i").as(idCol),
-          (-col("e.ns")).as(scoreCol))
-        .withColumn(rankName, row_number().over(
-          Window.partitionBy(queryIdCol)
-            .orderBy(col(scoreCol).desc, col(idCol))))
-        .select(col(queryIdCol), col(idCol), col(rankName))
+      Similarity.perQueryTopK(scored, queryIdCol, idCol, scoreCol,
+          nPerSide, descending = true)
+        .select(col(queryIdCol), col(idCol), col("rank").as(rankName))
     val lexR = sideRanks(lex, "bm25", "lex_rank")
     val denR = sideRanks(dense, "cos_sim", "dense_rank")
     // fuse by UNION + one aggregate instead of a full-outer join: a
@@ -792,10 +746,10 @@ object Retrieval {
     * with the tokenizer fused in, cheaper at corpus scale than
     * materializing token arrays); tf/df compute once per (doc, token)
     * over the union of query terms and fan out to queries via a
-    * broadcast join; both sides' per-query top-n ride the bounded
-    * `collect_top_k` heap; every join that isn't corpus-sized
-    * broadcasts. Windows only over per-query frames bounded by
-    * nPerSide. */
+    * broadcast join; both sides' per-query top-n ride
+    * [[Similarity.perQueryTopK]]'s bounded heap; every join that
+    * isn't corpus-sized broadcasts. Windows only over per-query
+    * frames bounded by nPerSide. */
   def hybridTopK(
       docs: DataFrame,
       queries: DataFrame,

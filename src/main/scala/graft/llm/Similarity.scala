@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, TopKAgg}
@@ -39,6 +40,114 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2norm(a) * l2norm(b))
 
+  // ---- shared retrieval contracts -------------------------------------
+  // One definition each, used by every batch, IVF and ADC path in
+  // Similarity, Quantize and Retrieval, so a fix lands once.
+
+  /** Per-query top-k: for each `queryCol` group of `scored`, the `k`
+    * best rows by `scoreCol` (`descending` for similarities,
+    * ascending for distances), ties to the LOWER `idCol`, as
+    * `(queryCol, idCol, payload…, scoreCol, rank)`.
+    *
+    * The bounded `collect_top_k` heap ([[graft.functions.TopKAgg]])
+    * keeps the k SMALLEST `(key, id, payload…)` structs, where the key
+    * is the score negated for `descending` (exact for IEEE doubles) —
+    * a total order equivalent to `(score, id ASC)`, so the kept set
+    * equals a `row_number` window's rows 1..k, ties at the boundary
+    * included (pinned in PerQueryTopKSpec). Every map task keeps one
+    * k-sized heap per query: the exchange carries ≤ k entries per
+    * (query, map task), never the scored frame, and nothing sorts it.
+    * The id rides the struct un-negated, so any orderable id type
+    * works. Payload columns ride the struct after the (key, id)
+    * prefix, which is already total, so they never decide what is
+    * kept. The final window ranks the ≤ k survivors of each query, so
+    * `rank` already runs 1..k; the k-NN callers still filter
+    * `rank <= k`, which keeps their plans' WindowGroupLimit shape. */
+  private[llm] def perQueryTopK(
+      scored: DataFrame,
+      queryCol: String,
+      idCol: String,
+      scoreCol: String,
+      k: Int,
+      descending: Boolean,
+      payload: Seq[String] = Nil): DataFrame = {
+    def key(c: Column): Column = if (descending) -c else c
+    val entry = Seq(key(col(scoreCol)).as("s"), col(idCol).as("i")) ++
+      payload.map(col)
+    scored
+      .groupBy(queryCol)
+      .agg(TopKAgg.collect_top_k(struct(entry: _*), k, reverse = true)
+        .as("top"))
+      .select(col(queryCol), explode(col("top")).as("e"))
+      .select(Seq(col(queryCol), col("e.i").as(idCol)) ++
+        payload.map(p => col(s"e.$p").as(p)) :+
+        key(col("e.s")).as(scoreCol): _*)
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(queryCol).orderBy(
+          if (descending) col(scoreCol).desc else col(scoreCol),
+          col(idCol))))
+  }
+
+  /** IVF probe-list ranking, single-query form: the `nprobe` lists of
+    * `cents` (`list_id`, `c_vec`) most similar to the query `q` by
+    * round-6 cosine, the lower list id winning ties; returns
+    * `list_id`. `q` is a literal, or a column of a one-row query frame
+    * the caller joined onto `cents`. The ranking runs in-plan on the
+    * nlist-row frame, so the round-6 cosine is the ENGINE's
+    * arithmetic, the same as the oracle's. */
+  private[llm] def probeLists(
+      cents: DataFrame, q: Column, nprobe: Int): DataFrame =
+    cents
+      .select(col("list_id"), round(cosine(col("c_vec"), q), 6).as("qc"))
+      .orderBy(col("qc").desc, col("list_id"))
+      .limit(nprobe)
+      .select("list_id")
+
+  /** IVF probe-list ranking, batch form: every row of `queries` keeps
+    * its own `nprobe` best lists under the single-query contract — a
+    * window over the bounded (queries × nlist) frame, never the
+    * corpus. Returns `(queryIdCol, carry…, list_id)`, one row per
+    * probed (query, list) pair; `carry` names query-side columns the
+    * scan needs next to the list id (the query vector, or its ADC
+    * table). */
+  private[llm] def probeLists(
+      cents: DataFrame,
+      queries: DataFrame,
+      queryIdCol: String,
+      queryVecCol: String,
+      nprobe: Int,
+      carry: Seq[String]): DataFrame =
+    cents
+      .crossJoin(broadcast(queries))
+      .select((col(queryIdCol) +: carry.map(col)) ++ Seq(col("list_id"),
+        round(cosine(col("c_vec"), col(queryVecCol)), 6).as("qc")): _*)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(queryIdCol)
+          .orderBy(col("qc").desc, col("list_id"))))
+      .filter(col("rk") <= nprobe)
+      .select(((queryIdCol +: carry) :+ "list_id").map(col): _*)
+
+  /** Asymmetric (ADC) distance of one row's PQ `codes` under a query's
+    * m×k distance table `dtab`: the sum over subspaces of
+    * `dtab[s][codes[s]]`, rounded to 4 — `m` array lookups per row.
+    * `dtab` must be a plain column (broadcast or literal), never an
+    * expression derived per row. */
+  private[llm] def adcDist(dtab: Column, codes: Column): Column =
+    round(aggregate(
+      zip_with(dtab, codes, (row, code) => element_at(row, code + 1)),
+      lit(0.0), (acc, e) => acc + e), 4)
+
+  /** Trained coarse centroids as an nlist-row `(list_id, c_vec)` frame
+    * of plan literals — what [[probeLists]] ranks and what a persisted
+    * IVF-PQ index stores. */
+  private[llm] def centroidFrame(
+      spark: SparkSession, cents: Array[(Long, Seq[Double])]): DataFrame =
+    spark.range(1)
+      .select(explode(array(cents.map { case (cid, c) =>
+        struct(lit(cid).as("list_id"), typedlit(c).as("c_vec"))
+      }: _*)).as("c"))
+      .select(col("c.list_id").as("list_id"), col("c.c_vec").as("c_vec"))
+
   /** Exact top-k by cosine against a single query vector (given as the
     * one-row DataFrame `query(q_vec)`), excluding `excludeId`. */
   def bruteForceTopK(
@@ -63,25 +172,13 @@ object Similarity {
     * row, one plan. The query set broadcasts (it is the small side by
     * definition — a probe batch, not the corpus), each corpus row
     * scores against all queries in its own task (codegen dot
-    * products, no shuffle of the corpus), and per-query top-k is a
-    * bounded `collect_top_k` aggregate ([[graft.functions.TopKAgg]]):
-    * every map task keeps one k-sized heap per query, the exchange
-    * carries ≤ k (cos, id) entries per (query, map task) — never the
-    * |corpus|×|queries| scored frame, and never a full sort of it
-    * (which even `WindowGroupLimit`'s partial mode would need). The
-    * final window then ranks ≤ k survivors per query. For corpora
-    * where even scoring every row is too much, cut candidates first
-    * with the LSH bucketing (`lshTopK` per query, or
+    * products, no shuffle of the corpus), and per-query top-k is
+    * [[perQueryTopK]]'s bounded heap, `(cos_sim DESC, id ASC)` with
+    * exact ties at the k boundary — never the |corpus|×|queries|
+    * scored frame through the exchange, and never a full sort of it.
+    * For corpora where even scoring every row is too much, cut
+    * candidates first with the LSH bucketing (`lshTopK` per query, or
     * `nearDupCosine`'s capped bucket join) and feed survivors here.
-    *
-    * Ties at the k boundary are exact: the heap keeps the k SMALLEST
-    * by the full (-cos_sim, id) struct — a total order equivalent to
-    * cos_sim DESC, id ASC — so the kept set equals the window-rank
-    * answer row for row (pinned in SimilaritySpec against a reference
-    * window plan). The id rides the struct un-negated, so any
-    * orderable id type works (strings, longs incl. Long.MinValue —
-    * the earlier (cos_sim, -id) formulation required numeric ids and
-    * overflowed on Long.MinValue).
     *
     * `excludeSelf` (default true) drops corpus rows whose id equals
     * the query id — the right semantics when the query batch is drawn
@@ -99,7 +196,6 @@ object Similarity {
       vecCol: String = "embedding",
       excludeSelf: Boolean = true): DataFrame = {
     GraftFunctions.register(corpus.sparkSession)
-    import org.apache.spark.sql.expressions.Window
     val joined = corpus
       .crossJoin(broadcast(
         queries.select(col(queryIdCol), col(queryVecCol))))
@@ -109,32 +205,15 @@ object Similarity {
         col(queryIdCol),
         col(idCol),
         round(cosine(col(vecCol), col(queryVecCol)), 4).as("cos_sim"))
-    // Smallest by (-cos_sim, id) ⇔ cos_sim DESC, id ASC — the window
-    // ordering below, so rank 1..k lands on the same rows. Negating
-    // the double score (exact for IEEE doubles) instead of the id
-    // keeps the id column type-agnostic.
-    val topk = scored
-      .groupBy(queryIdCol)
-      .agg(TopKAgg.collect_top_k(
-        struct((-col("cos_sim")).as("neg_cos"), col(idCol).as("nbr")),
-        k, reverse = true).as("top"))
-      .select(col(queryIdCol), explode(col("top")).as("e"))
-      .select(
-        col(queryIdCol),
-        col("e.nbr").as(idCol),
-        (-col("e.neg_cos")).as("cos_sim"))
-    topk
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(queryIdCol)
-          .orderBy(col("cos_sim").desc, col(idCol))))
+    perQueryTopK(scored, queryIdCol, idCol, "cos_sim", k, descending = true)
       .filter(col("rank") <= k)
   }
 
   /** IVF-accelerated batch k-NN join — [[knnJoin]] with the coarse
     * quantizer's probe pruning applied PER QUERY: the quantizer
     * trains once ([[lloydCentroids]], deterministic), each query
-    * ranks the trained centroids (round-6 cosine, lower list id
-    * ties) and keeps its `nprobe` best lists, and a corpus row is
+    * keeps its `nprobe` best trained lists ([[probeLists]]' batch
+    * form), and a corpus row is
     * scored only against the queries probing its list. At 100 TB
     * this cuts the scored-pair count to ≈ nprobe/nlist of the
     * brute-force join's |corpus|·|queries| — the batch-serving shape
@@ -144,9 +223,9 @@ object Similarity {
     *
     * Scale: training as in [[kmeansLloyd]]; ONE corpus assignment
     * scan; the (query, probed-list) pairs broadcast (nq·nprobe rows,
-    * bounded by the query batch); the per-query top-k rides the
-    * bounded `collect_top_k` heap — ≤ k rows per (query, map task)
-    * cross the exchange, never the scored pairs.
+    * bounded by the query batch); the per-query top-k is
+    * [[perQueryTopK]] — ≤ k rows per (query, map task) cross the
+    * exchange, never the scored pairs.
     *
     * '''Tiering — this is the AD-HOC/ONE-SHOT tier.''' Every
     * invocation trains Lloyd and assigns the full corpus in-query;
@@ -173,7 +252,6 @@ object Similarity {
       excludeSelf: Boolean = true): DataFrame = {
     require(nprobe >= 1, s"nprobe must be ≥ 1: $nprobe")
     GraftFunctions.register(corpus.sparkSession)
-    import org.apache.spark.sql.expressions.Window
     val vecs = doubleVecs(corpus, idCol, vecCol)
     val cents = lloydCentroids(vecs, nlist, iters)
     val q = queries.select(col(queryIdCol).as("__graft_qid"),
@@ -184,43 +262,16 @@ object Similarity {
         col("vid").as(idCol),
         lit(null).cast("double").as("cos_sim"),
         lit(null).cast("int").as("rank")).limit(0)
-    val centDf = corpus.sparkSession.range(1)
-      .select(explode(array(cents.map { case (cid, c) =>
-        struct(lit(cid).as("list_id"), typedlit(c).as("c_vec"))
-      }: _*)).as("c"))
-      .select(col("c.list_id").as("list_id"), col("c.c_vec").as("c_vec"))
-    // per-query probe ranking: an (nq × nlist)-row frame, bounded by
-    // the query batch — the window is over that tiny frame, never the
-    // corpus
-    val probeSet = centDf
-      .crossJoin(broadcast(q))
-      .select(col("__graft_qid"), col("__graft_qv"), col("list_id"),
-        round(cosine(col("c_vec"), col("__graft_qv")), 6).as("qc"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("__graft_qid")
-          .orderBy(col("qc").desc, col("list_id"))))
-      .filter(col("rk") <= nprobe)
-      .select("__graft_qid", "__graft_qv", "list_id")
+    val probeSet = probeLists(centroidFrame(corpus.sparkSession, cents),
+      q, "__graft_qid", "__graft_qv", nprobe, carry = Seq("__graft_qv"))
     val joined = assignToCentroids(vecs, cents)
       .join(broadcast(probeSet), col("cid") === col("list_id"))
     val scored = (if (excludeSelf)
         joined.filter(col("vid") =!= col("__graft_qid"))
       else joined)
-      .select(col("__graft_qid"), col("vid"),
+      .select(col("__graft_qid").as(queryIdCol), col("vid").as(idCol),
         round(cosine(col("v"), col("__graft_qv")), 4).as("cos_sim"))
-    scored
-      .groupBy("__graft_qid")
-      .agg(TopKAgg.collect_top_k(
-        struct((-col("cos_sim")).as("neg_cos"), col("vid").as("nbr")),
-        k, reverse = true).as("top"))
-      .select(col("__graft_qid"), explode(col("top")).as("e"))
-      .select(
-        col("__graft_qid").as(queryIdCol),
-        col("e.nbr").as(idCol),
-        (-col("e.neg_cos")).as("cos_sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(queryIdCol)
-          .orderBy(col("cos_sim").desc, col(idCol))))
+    perQueryTopK(scored, queryIdCol, idCol, "cos_sim", k, descending = true)
       .filter(col("rank") <= k)
   }
 
@@ -267,30 +318,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF index with REAL coarse centroids: k-means (spark.ml, fixed
-    * seed) fit on the embeddings, assignment via the fitted model —
-    * the production-quality variant of ivfAssign below. Output schema
-    * matches ivfAssign (idCol, vecCol, list_id), so ivfTopK works on
-    * either. Fit cost is one pass per k-means iteration over a sample;
-    * at 100 TB fit on a sample (maxRowsToFit) and assign everything. */
-  def ivfKmeansAssign(
-      embeddings: DataFrame,
-      nlist: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      maxIter: Int = 10): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val withVec = embeddings.withColumn("_features",
-      array_to_vector(col(vecCol).cast("array<double>")))
-    val model = new KMeans()
-      .setK(nlist).setSeed(42L).setMaxIter(maxIter)
-      .setFeaturesCol("_features").setPredictionCol("list_id")
-      .fit(withVec)
-    model.transform(withVec)
-      .select(col(idCol), col(vecCol), col("list_id").cast("long").as("list_id"))
-  }
-
   /** IVF-lite index: centroids = first nlist vectors by id (broadcast,
     * deterministic); assignment = argmax cosine over the broadcast
     * centroid array (per-row loop, no shuffle of the big side).
@@ -317,8 +344,11 @@ object Similarity {
       .select(col(idCol), col(vecCol), col("best.list_id").as("list_id"))
   }
 
-  /** Query the IVF index: rank centroids by query similarity, scan only
-    * the nprobe best lists. */
+  /** Query the IVF index: rank the lists by query similarity
+    * ([[probeLists]]), scan only the nprobe best lists. Each list is
+    * represented by its LOWEST-id member, which for [[ivfAssign]] is
+    * the list's centroid itself (the centroids are the nlist lowest
+    * ids, and a centroid joins its own list). */
   def ivfTopK(
       indexed: DataFrame,
       query: DataFrame,
@@ -330,16 +360,11 @@ object Similarity {
     GraftFunctions.register(indexed.sparkSession)
     val centroids = indexed
       .groupBy("list_id")
-      .agg(first(col(vecCol)).as("c_vec"))
-    val probeLists = centroids
-      .crossJoin(broadcast(query))
-      .select(col("list_id"), cosine(col("c_vec"), col("q_vec")).as("c_sim"))
-      .orderBy(col("c_sim").desc)
-      .limit(nprobe)
-      .select("list_id")
+      .agg(min_by(col(vecCol), col(idCol)).as("c_vec"))
     indexed
       .filter(col(idCol) =!= excludeId)
-      .join(broadcast(probeLists), Seq("list_id"))
+      .join(broadcast(probeLists(centroids.crossJoin(broadcast(query)),
+        col("q_vec"), nprobe)), Seq("list_id"))
       .crossJoin(broadcast(query))
       .select(col(idCol),
         round(cosine(col(vecCol), col("q_vec")), 4).as("cos_sim"))
@@ -385,7 +410,7 @@ object Similarity {
   /** Nearest-centroid assignment against a FIXED, deterministic
     * centroid table — the k lowest-id vectors (no k-means iterations,
     * so the assignment is a pure function of the data and can be
-    * oracle-checked row for row; `ivfKmeansAssign` is the learned
+    * oracle-checked row for row; [[kmeansAssign]] is the trained
     * variant). Centroids broadcast (k rows), every vector scores all
     * k in its own task via the codegen dot product, and the winner is
     * an `array_max` over (cos, -centroid_id) structs — no shuffle of
@@ -478,8 +503,8 @@ object Similarity {
   /** Distributed Lloyd k-means over the embedding column — the
     * trained-clustering primitive (IVF list training, SemDeDup
     * clustering, cluster-balanced sampling) expressed so every round
-    * is oracle-recomputable, unlike [[ivfKmeansAssign]]'s spark.ml
-    * fit (random init + implementation-defined tie handling):
+    * is oracle-recomputable (no random init, no
+    * implementation-defined tie handling):
     *
     *   - init: the k lowest-`idCol` vectors, cluster ids 0..k-1 in id
     *     order (pure function of the data);
@@ -627,12 +652,11 @@ object Similarity {
   }
 
   /** IVF ANN over LLOYD-TRAINED centroids — end-to-end
-    * oracle-recomputable, unlike [[ivfKmeansAssign]] (spark.ml's
-    * random init) and row-level unlike [[ivfTopK]]'s gate audit:
-    * train with [[lloydCentroids]] (deterministic), rank the trained
-    * centroids by round-6 query cosine (ties to the lower list id),
-    * scan only the `nprobe` best lists, return exact top-k by
-    * `(round-4 cosine DESC, id ASC)`.
+    * oracle-recomputable and row-level, unlike [[ivfTopK]]'s gate
+    * audit: train with [[lloydCentroids]] (deterministic), rank the
+    * trained centroids with [[probeLists]], scan only the `nprobe`
+    * best lists, return exact top-k by `(round-4 cosine DESC, id
+    * ASC)`.
     *
     * Scale: training as in [[kmeansLloyd]]; the search itself is one
     * corpus assignment scan filtered by a BROADCAST nprobe-row list
@@ -658,21 +682,12 @@ object Similarity {
       return vecs.crossJoin(q).select(
         col("vid").as(idCol),
         lit(null).cast("double").as("cos_sim")).limit(0)
-    val centDf = embeddings.sparkSession.range(1)
-      .select(explode(array(cents.map { case (cid, c) =>
-        struct(lit(cid).as("list_id"), typedlit(c).as("c_vec"))
-      }: _*)).as("c"))
-      .select(col("c.list_id").as("list_id"), col("c.c_vec").as("c_vec"))
-    val probeLists = centDf
-      .crossJoin(broadcast(q))
-      .select(col("list_id"),
-        round(cosine(col("c_vec"), col("qv")), 6).as("qc"))
-      .orderBy(col("qc").desc, col("list_id"))
-      .limit(nprobe)
-      .select("list_id")
+    val probed = probeLists(
+      centroidFrame(embeddings.sparkSession, cents).crossJoin(broadcast(q)),
+      col("qv"), nprobe)
     assignToCentroids(vecs, cents)
       .filter(col("vid") =!= lit(excludeId))
-      .join(broadcast(probeLists), col("cid") === col("list_id"))
+      .join(broadcast(probed), col("cid") === col("list_id"))
       .crossJoin(broadcast(q))
       .select(col("vid").as(idCol),
         round(cosine(col("v"), col("qv")), 4).as("cos_sim"))
@@ -693,7 +708,7 @@ object Similarity {
     *
     * Scale: the cap rides the bounded `collect_top_k` heap — at most
     * `maxPerCluster` (neg_cos, id) pairs per cluster cross the
-    * exchange, never the corpus (same idiom as [[knnJoin]]; a window
+    * exchange, never the corpus (the heap of [[perQueryTopK]]; a window
     * rank over k partitions would funnel the whole corpus through k
     * tasks). The kept-id sum folds over the heap array with a HOF —
     * no explode, no second shuffle. */
@@ -872,13 +887,10 @@ object Similarity {
     * every query vector, the top-k most-similar corpus vectors whose
     * LABEL differs from the query's — the near-miss examples a
     * bi-encoder trains against. Same plan shape as [[knnJoin]] (query
-    * batch broadcasts, corpus never shuffles, per-query top-k is the
-    * bounded `collect_top_k` heap — ≤ k entries per (query, map task)
-    * through the exchange, no sort of the scored frame); the label
+    * batch broadcasts, corpus never shuffles, per-query top-k is
+    * [[perQueryTopK]] with the label as its payload); the label
     * predicate is fused into the scoring task so mismatched pairs die
-    * before the aggregate. The label rides the heap struct as a
-    * payload field: the (-cos_sim, id) prefix is already a total
-    * order, so it never influences which rows are kept. */
+    * before the aggregate. */
   def hardNegatives(
       queries: DataFrame,
       corpus: DataFrame,
@@ -890,7 +902,6 @@ object Similarity {
       vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
     GraftFunctions.register(corpus.sparkSession)
-    import org.apache.spark.sql.expressions.Window
     val scored = corpus
       .crossJoin(broadcast(queries.select(
         col(queryIdCol), col(queryVecCol), col(queryLabelCol))))
@@ -900,21 +911,8 @@ object Similarity {
         col(idCol),
         col(labelCol),
         round(cosine(col(vecCol), col(queryVecCol)), 4).as("cos_sim"))
-    scored
-      .groupBy(queryIdCol)
-      .agg(TopKAgg.collect_top_k(
-        struct((-col("cos_sim")).as("neg_cos"), col(idCol).as("nbr"),
-          col(labelCol)),
-        k, reverse = true).as("top"))
-      .select(col(queryIdCol), explode(col("top")).as("e"))
-      .select(
-        col(queryIdCol),
-        col("e.nbr").as(idCol),
-        col(s"e.$labelCol").as(labelCol),
-        (-col("e.neg_cos")).as("cos_sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(queryIdCol)
-          .orderBy(col("cos_sim").desc, col(idCol))))
+    perQueryTopK(scored, queryIdCol, idCol, "cos_sim", k,
+      descending = true, payload = Seq(labelCol))
       .filter(col("rank") <= k)
   }
 

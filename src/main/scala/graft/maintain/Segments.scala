@@ -1,7 +1,7 @@
 package graft.maintain
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Segmented table layout for the persisted serving indexes (LSH dedup,
   * BM25, IVF-PQ) — the Lucene-segments idea expressed as parquet
@@ -164,6 +164,27 @@ object Segments {
     metaRow(spark, indexPath).exists(r =>
       r.schema.fieldNames.contains("format") &&
         r.getAs[Int]("format") == expected)
+
+  /** Invalidate the index at `indexPath` before a rebuild in place:
+    * delete its `meta` table, the validity marker [[metaRow]] reads,
+    * so a crash mid-rebuild reads as "no index" instead of stale meta
+    * over half-rebuilt tables. The rebuild writes meta LAST
+    * ([[writeMeta]]). */
+  private[graft] def clearMeta(
+      spark: SparkSession, indexPath: String): Unit = {
+    val metaPath = new Path(s"$indexPath/meta")
+    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(metaPath) && !fs.delete(metaPath, true))
+      throw new Swap.SwapFailedException(
+        s"could not clear stale meta at $metaPath")
+  }
+
+  /** Write the index's one-row `meta` table from `fields` — LAST, after
+    * every other table: its `_SUCCESS` marker certifies them all. */
+  private[graft] def writeMeta(
+      spark: SparkSession, indexPath: String, fields: Column*): Unit =
+    spark.range(1).select(fields: _*)
+      .write.mode("overwrite").parquet(s"$indexPath/meta")
 
   /** Per-table-path monitors: appends and compactions of the SAME
     * table serialize within this JVM, so a segment written while a

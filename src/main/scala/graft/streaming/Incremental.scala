@@ -361,6 +361,29 @@ object Incremental {
     }
   }
 
+  /** The one `foreachBatch` behind the four serving-index stream arms
+    * below: each micro-batch goes to `append(batch, segId)` with the
+    * checkpoint-namespaced batch id as the segment id, so
+    * foreachBatch's at-least-once replay of a batch overwrites its
+    * own segment instead of appending beside it — exactly-once per
+    * batch. Segments a pre-namespacing build wrote for the same batch
+    * are dropped first ([[dropLegacySegments]]). AvailableNow: the
+    * stream drains what is there and stops. */
+  private def indexAppendStream(
+      rows: DataFrame,
+      indexPath: String,
+      checkpointDir: String)(
+      append: (DataFrame, String) => Unit): StreamingQuery =
+    rows.writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        dropLegacySegments(batch.sparkSession, indexPath,
+          checkpointDir, id)
+        append(batch, indexSegId(checkpointDir, id))
+      }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
   /** Streaming ANN-index maintenance: every micro-batch of fresh
     * vectors is appended to a persisted IVF-PQ serving index
     * ([[graft.llm.Quantize.appendToPqIndex]] — assign to the FROZEN
@@ -386,16 +409,9 @@ object Incremental {
       vecs: DataFrame,
       indexPath: String,
       checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dropLegacySegments(batch.sparkSession, indexPath,
-          checkpointDir, id)
-        graft.llm.Quantize.appendToPqIndex(batch, indexPath,
-          segId = indexSegId(checkpointDir, id))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    indexAppendStream(vecs, indexPath, checkpointDir)(
+      (batch, segId) =>
+        graft.llm.Quantize.appendToPqIndex(batch, indexPath, segId = segId))
 
   /** Streaming BM25-index maintenance: every micro-batch of fresh
     * documents folds into the persisted inverted index
@@ -413,16 +429,9 @@ object Incremental {
       docs: DataFrame,
       indexPath: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dropLegacySegments(batch.sparkSession, indexPath,
-          checkpointDir, id)
-        graft.llm.Retrieval.appendToBm25Index(batch, indexPath,
-          segId = indexSegId(checkpointDir, id))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    indexAppendStream(docs, indexPath, checkpointDir)(
+      (batch, segId) =>
+        graft.llm.Retrieval.appendToBm25Index(batch, indexPath, segId = segId))
 
   /** Streaming ingestion into a SNAPSHOT table — every micro-batch
     * lands as one atomic, time-travelable version
@@ -482,16 +491,9 @@ object Incremental {
       docs: DataFrame,
       indexPath: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dropLegacySegments(batch.sparkSession, indexPath,
-          checkpointDir, id)
-        graft.llm.Retrieval.appendToDenseIndex(batch, indexPath,
-          segId = indexSegId(checkpointDir, id))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    indexAppendStream(docs, indexPath, checkpointDir)(
+      (batch, segId) =>
+        graft.llm.Retrieval.appendToDenseIndex(batch, indexPath, segId = segId))
 
   /** Streaming LSH-dedup-index maintenance: every micro-batch of
     * newly-vetted reference documents folds into the persisted dedup
@@ -509,16 +511,9 @@ object Incremental {
       docs: DataFrame,
       indexPath: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dropLegacySegments(batch.sparkSession, indexPath,
-          checkpointDir, id)
-        graft.llm.Dedup.appendToLshIndex(batch, indexPath,
-          segId = indexSegId(checkpointDir, id))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    indexAppendStream(docs, indexPath, checkpointDir)(
+      (batch, segId) =>
+        graft.llm.Dedup.appendToLshIndex(batch, indexPath, segId = segId))
 
   /** Frozen-recipe temperature sampling as a shared batch/stream
     * transformation: the per-source keep thresholds are derived ONCE

@@ -58,17 +58,24 @@ class SimilaritySpec extends AnyFunSuite {
     assert((top.map(_._1).toSet intersect bruteTop).nonEmpty)
   }
 
-  test("kmeans IVF: balanced lists, probe recall at least ivf-lite class") {
-    val indexed = Similarity.ivfKmeansAssign(emb, nlist = 8).cache()
-    assert(indexed.count() == emb.count())
-    val lists = indexed.groupBy("list_id").count().collect()
-    assert(lists.length == 8)
-    // kmeans lists should be non-degenerate (no list owns everything)
-    assert(lists.map(_.getLong(1)).max < emb.count())
-    val top = Similarity.ivfTopK(indexed, query, k = 10, nprobe = 4,
-      excludeId = 0L).as[(Long, Double)].collect()
-    assert(top.length == 10)
-    assert((top.map(_._1).toSet intersect bruteTop).nonEmpty)
+  test("ivfTopK ranks each list by its lowest-id member, not an arbitrary one") {
+    // one partition, ids descending: a first-row representative would
+    // be each list's HIGHEST id — list 0's far member 9, which ranks
+    // list 0 last, so nprobe = 1 would probe list 4 and miss the
+    // planted neighbour 1. The lowest id (the centroid) ranks list 0
+    // first.
+    val indexed = Seq(
+      (9L, Array(0.0f, 1.0f), 0L),
+      (8L, Array(0.8f, 0.6f), 4L),
+      (4L, Array(0.7f, 0.7f), 4L),
+      (1L, Array(1.0f, 0.05f), 0L),
+      (0L, Array(1.0f, 0.0f), 0L))
+      .toDF("vec_id", "embedding", "list_id")
+      .repartition(1).sortWithinPartitions($"vec_id".desc)
+    val q = Seq(Tuple1(Array(1.0f, 0.04f))).toDF("q_vec")
+    val top = Similarity.ivfTopK(indexed, q, k = 1, nprobe = 1)
+      .select("vec_id").as[Long].collect().toSeq
+    assert(top == Seq(1L))
   }
 
   test("IVF gate rows: superset-prune holds, planted copy is top-1") {
