@@ -771,7 +771,6 @@ object Quantize {
         Similarity.adcDist(col("__graft_dtab"), col("codes")).as("adc_dist"))
     Similarity.perQueryTopK(scored, queryIdCol, idCol, "adc_dist", k,
       descending = false)
-      .filter(col("rank") <= k)
   }
 
   // ---- exact re-rank (refine) over the persisted index ---------------

@@ -61,8 +61,9 @@ object Similarity {
     * works. Payload columns ride the struct after the (key, id)
     * prefix, which is already total, so they never decide what is
     * kept. The final window ranks the ≤ k survivors of each query, so
-    * `rank` already runs 1..k; the k-NN callers still filter
-    * `rank <= k`, which keeps their plans' WindowGroupLimit shape. */
+    * `rank` already runs 1..k and callers need no `rank <= k` filter
+    * (one would only add a WindowGroupLimit and a Filter that drop no
+    * row). */
   private[llm] def perQueryTopK(
       scored: DataFrame,
       queryCol: String,
@@ -206,7 +207,6 @@ object Similarity {
         col(idCol),
         round(cosine(col(vecCol), col(queryVecCol)), 4).as("cos_sim"))
     perQueryTopK(scored, queryIdCol, idCol, "cos_sim", k, descending = true)
-      .filter(col("rank") <= k)
   }
 
   /** IVF-accelerated batch k-NN join — [[knnJoin]] with the coarse
@@ -272,7 +272,6 @@ object Similarity {
       .select(col("__graft_qid").as(queryIdCol), col("vid").as(idCol),
         round(cosine(col("v"), col("__graft_qv")), 4).as("cos_sim"))
     perQueryTopK(scored, queryIdCol, idCol, "cos_sim", k, descending = true)
-      .filter(col("rank") <= k)
   }
 
   /** Candidate ids sharing an LSH bucket with the query in ≥1 table. */
@@ -913,7 +912,6 @@ object Similarity {
         round(cosine(col(vecCol), col(queryVecCol)), 4).as("cos_sim"))
     perQueryTopK(scored, queryIdCol, idCol, "cos_sim", k,
       descending = true, payload = Seq(labelCol))
-      .filter(col("rank") <= k)
   }
 
   /** Embedding-space decontamination scan: for every corpus vector,

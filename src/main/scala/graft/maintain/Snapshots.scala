@@ -1,11 +1,15 @@
 package graft.maintain
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DateType,
-  DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType,
-  StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BinaryType, ByteType, DataType,
+  DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType,
+  ShortType, StringType, StructField, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Snapshot isolation + time travel for parquet tables — the
   * lakehouse-table-format concern the reference names ("iceberg") but
@@ -103,6 +107,35 @@ object Snapshots {
   def exists(spark: SparkSession, path: String): Boolean =
     versions(spark, path).nonEmpty
 
+  /** The manifest's columns, in the order [[commit]] writes them. One
+    * row per (file, stat column): numeric bounds in the [[statNorm]]
+    * domain, truncated string bounds, or a per-file bloom with its
+    * column's dtype; a file with no stat carries one all-null stat row.
+    * The last five columns repeat the commit's metadata on every row.
+    * Manifests are read with this schema rather than an inferred one,
+    * which saves a footer job per read; a column an older manifest
+    * lacks (`commit_key`, the `stat_*` family) reads as null. */
+  private[graft] val ManifestSchema: StructType = StructType(Seq(
+    StructField("file", StringType),
+    StructField("stat_col", StringType),
+    StructField("stat_min", DoubleType),
+    StructField("stat_max", DoubleType),
+    StructField("stat_min_str", StringType),
+    StructField("stat_max_str", StringType),
+    StructField("stat_bloom", BinaryType),
+    StructField("stat_bloom_type", StringType),
+    StructField("version", LongType),
+    StructField("ts_ms", LongType),
+    StructField("operation", StringType),
+    StructField("parent", LongType),
+    StructField("commit_key", StringType)))
+
+  /** Spark's footer key for the written schema — the one schema
+    * inference itself reads. */
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** One version's manifest, read with [[ManifestSchema]] (no schema
+    * job). */
   private def manifestDf(spark: SparkSession, path: String,
       v: Long): DataFrame = {
     val p = s"$path/$SnapDir/v$v"
@@ -110,17 +143,70 @@ object Snapshots {
       throw new NoSuchVersionException(
         s"no snapshot v$v at $path (have: " +
           s"${versions(spark, path).mkString(",")})")
-    spark.read.parquet(p)
+    spark.read.schema(ManifestSchema).parquet(p)
   }
 
   /** ONE multi-path read over every retained manifest — the same
     * O(versions)-Spark-jobs trap SnapshotScaleProbe caught in the
-    * replay check applies to any per-version loop; mergeSchema
-    * tolerates manifests from before a column existed. */
+    * replay check applies to any per-version loop. Read with
+    * [[ManifestSchema]]: manifests from before a column existed
+    * null-fill it, as a merged schema would, without a footer job. */
   private def allManifests(
       spark: SparkSession, path: String, vs: Seq[Long]): DataFrame =
-    spark.read.option("mergeSchema", "true")
+    spark.read.schema(ManifestSchema)
       .parquet(vs.map(v => s"$path/$SnapDir/v$v"): _*)
+
+  /** [[ManifestSchema]] as the Parquet schema Spark writes for it:
+    * every column optional, strings annotated STRING. */
+  private lazy val ManifestParquetType =
+    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      ManifestSchema.fields.map { fd =>
+        val tpe = fd.dataType match {
+          case StringType => "binary" -> " (STRING)"
+          case BinaryType => "binary" -> ""
+          case DoubleType => "double" -> ""
+          case LongType   => "int64" -> ""
+          case t => throw new IllegalStateException(s"manifest type $t")
+        }
+        s"  optional ${tpe._1} ${fd.name}${tpe._2};"
+      }.mkString("message spark_schema {\n", "\n", "\n}"))
+
+  /** Write manifest `rows` (values in [[ManifestSchema]] order, null
+    * for absent) from the driver as one SNAPPY part file in `dir`,
+    * with Spark's schema footer key, so Spark reads it exactly as it
+    * reads a part file of its own. The fresh UUID in the name keeps
+    * [[Segments.listingFingerprint]] apart across an expire and a
+    * re-create of the same version. */
+  private def writeManifestPart(conf: Configuration, dir: Path,
+      rows: Seq[Seq[Any]]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    import org.apache.parquet.io.api.Binary
+    val file = new Path(dir,
+      s"part-${java.util.UUID.randomUUID()}.snappy.parquet")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+        .fromPath(file, conf))
+      .withConf(conf)
+      .withType(ManifestParquetType)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .withExtraMetaData(
+        java.util.Map.of(SparkRowMetadataKey, ManifestSchema.json))
+      .build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(ManifestParquetType)
+      r.zipWithIndex.foreach {
+        case (null, _)           => ()
+        case (x: String, i)      => g.add(i, x)
+        case (x: Double, i)      => g.add(i, x)
+        case (x: Long, i)        => g.add(i, x)
+        case (x: Array[Byte], i) => g.add(i, Binary.fromConstantByteArray(x))
+        case (x, i) => throw new IllegalStateException(
+          s"manifest value $x for ${ManifestSchema.fields(i).name}")
+      }
+      w.write(g)
+    } finally w.close()
+  }
 
   /** One row per retained version: (version, ts_ms, operation,
     * n_files, parent), ascending — the audit surface (`history` in
@@ -267,8 +353,8 @@ object Snapshots {
     * min, upper is bumped ≥ max, so probes are always supersets).
     * Manifest grain: one row per (file, stat_col); a file with no
     * stats carries one null-stat row. Files without stats for the
-    * probed column are always read (unknown = candidate, the
-    * [[Manifest]] append-safety rule).
+    * probed column are always read (unknown = candidate: a file
+    * appended without stats can never be pruned away).
     *
     * `blooms` (col → (bloom bytes, column dtype ddl)) is COMMIT-LOCAL
     * transport only: per-file bloom filters over `xxhash64(col)` for
@@ -288,25 +374,6 @@ object Snapshots {
         * sketch bytes to the driver). */
       bloomColsRecorded: Set[String] = Set.empty)
 
-  /** Write `df`'s rows as a fresh immutable data batch; returns one
-    * [[FileEntry]] per written file. With `statsCols` set, per-file
-    * min/max over EVERY listed column are computed in ONE scan of the
-    * just-written batch (grouped on `_metadata.file_path` —
-    * commit-local cost, never a table scan) so later reads can skip
-    * files by range on any of them.
-    *
-    * ZERO-ROW part files (the stats scan already identifies them for
-    * free: a rowless file never appears in the grouped aggregate) are
-    * dropped from the returned entries — a stat-less empty file would
-    * poison every future "unknown = candidate" probe (e.g. a delete
-    * that empties its touched file would otherwise leave a file no
-    * later no-op check can ever rule out). The unreferenced physical
-    * files sweep with [[expire]]'s orphan pass. When dropping would
-    * leave NOTHING (`allowEmpty = false`, the default), one file is
-    * kept so an empty table stays schema-readable; content-replacing
-    * commits that carry untouched parent files pass `allowEmpty =
-    * true` ([[commitRewrite]]). Stat-less writes skip the scan and
-    * keep every file (no way to know emptiness for free). */
   private val ConstraintsDir = "_constraints"
 
   /** SQL CHECK semantics: a row VIOLATES only when the expression
@@ -402,6 +469,52 @@ object Snapshots {
     }
   }
 
+  /** What a data file's footer tells the driver: its row count and
+    * the Spark schema the write stored under Spark's row-metadata key
+    * (the same JSON schema inference reads). */
+  private final case class Footer(rows: Long, schema: StructType)
+
+  /** Footers of `files`, read on the driver: a few KB each, no Spark
+    * job. The files must come from a Spark `df.write.parquet`, which
+    * always stores the row-metadata key. */
+  private def batchFooters(spark: SparkSession,
+      files: Seq[Path]): Seq[Footer] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+      try {
+        val meta = r.getFooter
+        Footer(meta.getBlocks.asScala.map(_.getRowCount).sum,
+          DataType.fromJson(meta.getFileMetaData.getKeyValueMetaData
+            .get(SparkRowMetadataKey)).asInstanceOf[StructType])
+      } finally r.close()
+    }
+  }
+
+  /** Write `df`'s rows as a fresh immutable data batch; returns one
+    * [[FileEntry]] per written file. With `statsCols` set, per-file
+    * min/max over EVERY listed column are computed in ONE scan of the
+    * just-written batch (grouped on `_metadata.file_path` —
+    * commit-local cost, never a table scan) so later reads can skip
+    * files by range on any of them.
+    *
+    * ZERO-ROW part files (the stats scan already identifies them for
+    * free: a rowless file never appears in the grouped aggregate) are
+    * dropped from the returned entries — a stat-less empty file would
+    * poison every future "unknown = candidate" probe (e.g. a delete
+    * that empties its touched file would otherwise leave a file no
+    * later no-op check can ever rule out). The unreferenced physical
+    * files sweep with [[expire]]'s orphan pass. When dropping would
+    * leave NOTHING (`allowEmpty = false`, the default), one file is
+    * kept so an empty table stays schema-readable; content-replacing
+    * commits that carry untouched parent files pass `allowEmpty =
+    * true` ([[commitRewrite]]). Stat-less writes skip the scan and
+    * keep every file (no way to know emptiness for free).
+    *
+    * The scan's schema and the auto-bloom row count come from the
+    * written files' footers, read on the driver ([[batchFooters]]),
+    * so neither costs a Spark job. */
   private def writeBatch(df: DataFrame, path: String,
       statsCols: Seq[String] = Seq.empty,
       allowEmpty: Boolean = false,
@@ -413,15 +526,15 @@ object Snapshots {
     val spark = df.sparkSession
     val f = fs(spark, path)
     enforceConstraints(spark, path, batch)
-    val paths = f.listStatus(new Path(batch)).toSeq
+    val files = f.listStatus(new Path(batch)).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
+    val paths = files.map(_.getPath.toString)
     if (statsCols.isEmpty && bloomCols.isEmpty) paths.map(FileEntry(_))
     else {
-      // keyed on the scheme-less URI path: _metadata.file_path is a
-      // full URI (file:///…) while the listing yields Path strings —
-      // normalizing both sides makes this an exact map lookup
-      val reread = spark.read.parquet(batch)
+      val footers = batchFooters(spark, files.map(_.getPath))
+      // the schema the write stored in its footer is the one
+      // inference would read, so the re-read plans without a job
+      val reread = spark.read.schema(footers.head.schema).parquet(batch)
       val isStr = statsCols.map(c =>
         c -> reread.schema(c).dataType.isInstanceOf[StringType]).toMap
       val aggs = statsCols.flatMap { c =>
@@ -442,22 +555,19 @@ object Snapshots {
       } ++ {
         if (bloomCols.isEmpty) Seq.empty
         else {
-          // auto-sizing reads only parquet footer metadata (count()
-          // over an untransformed parquet scan never touches data);
-          // sized for the LARGEST file by byte share — an average
-          // would under-size a skewed batch's big file back into the
+          // auto-sizing reads only the footers' row counts; sized for
+          // the LARGEST file by byte share — an average would
+          // under-size a skewed batch's big file back into the
           // saturation auto-sizing exists to prevent
           val bits =
             if (bloomBits > 0) bloomBits
             else {
-              val lens = f.listStatus(new Path(batch)).toSeq
-                .filter(st => st.isFile &&
-                  st.getPath.getName.endsWith(".parquet"))
-                .map(_.getLen.toDouble)
+              val lens = files.map(_.getLen.toDouble)
               val maxShare =
                 if (lens.isEmpty || lens.sum == 0) 1.0
                 else lens.max / lens.sum
-              autoBloomBits(math.ceil(reread.count() * maxShare).toLong)
+              autoBloomBits(
+                math.ceil(footers.map(_.rows).sum * maxShare).toLong)
             }
           bloomCols.map { c =>
             // per-file key-membership sketch over the column's
@@ -472,6 +582,9 @@ object Snapshots {
       }
       val bloomTypes = bloomCols.map(c =>
         c -> reread.schema(c).dataType.sql).toMap
+      // keyed on the scheme-less URI path: _metadata.file_path is a
+      // full URI (file:///…) while the listing yields Path strings —
+      // normalizing both sides makes this an exact map lookup
       val stats = reread
         .groupBy(col("_metadata.file_path").as("__f"))
         .agg(aggs.head, aggs.tail: _*)
@@ -560,17 +673,22 @@ object Snapshots {
       spark: SparkSession, path: String, commitKey: String): Option[Long] = {
     val vs = versions(spark, path)
     if (vs.isEmpty) return None
-    val m = allManifests(spark, path, vs)
-    if (!m.columns.contains("commit_key")) None
-    else Option(
-        m.filter(col("commit_key") === commitKey)
+    Option(
+        allManifests(spark, path, vs)
+          .filter(col("commit_key") === commitKey)
           .agg(max(col("version"))).head().get(0))
       .map(_.asInstanceOf[Long])
   }
 
   /** Commit `files` as version `head + 1`, retrying against the new
     * head on a lost race. The manifest is written COMPLETELY to a tmp
-    * directory, then claimed via [[claimVersion]]. A `commitKey`
+    * directory, then claimed via [[claimVersion]]. The driver writes
+    * its rows ([[writeManifestPart]]), so the manifest costs no Spark
+    * job; only the bloom rows of carried files are copied by a Spark
+    * semi-join over the parent manifest, into a second part file, and
+    * only when a carried entry records a bloom. A won claim seeds
+    * [[entriesMemo]] with the committed entries, so the next op's
+    * [[entriesOf]] on the new head runs no job either. A `commitKey`
     * makes the commit IDEMPOTENT: a commit whose key already sits in
     * a retained manifest returns that version instead of applying
     * again — the Delta txn-appId/version pattern that turns
@@ -613,51 +731,9 @@ object Snapshots {
               " from the new head; re-derive from the current head")
       }
       val v = head + 1
-      val all = parentFiles(head) ++ files
-      import spark.implicits._
-      val manifestRows = all.flatMap { e =>
-        val rows =
-          e.stats.toSeq.map { case (c, (lo, hi)) =>
-            (e.file, c, Double.box(lo), Double.box(hi),
-              null: String, null: String,
-              null: Array[Byte], null: String)
-          } ++
-            e.strStats.toSeq.map { case (c, (lo, hi)) =>
-              (e.file, c, null: java.lang.Double, null: java.lang.Double,
-                lo, hi, null: Array[Byte], null: String)
-            } ++
-            e.blooms.toSeq.map { case (c, (bytes, tpe)) =>
-              (e.file, c, null: java.lang.Double, null: java.lang.Double,
-                null: String, null: String, bytes, tpe)
-            }
-        if (rows.isEmpty)
-          Seq((e.file, null: String,
-            null: java.lang.Double, null: java.lang.Double,
-            null: String, null: String, null: Array[Byte], null: String))
-        else rows
-      }
-      // ONE timestamp for every row of this version: meta() runs on
-      // both the base rows and the carried bloom rows, and history()
-      // groups on (version, ts_ms, …) — a per-call clock read would
-      // split one version into two history rows
-      val nowMs = System.currentTimeMillis()
-      def meta(df: DataFrame): DataFrame = df
-        .withColumn("version", lit(v))
-        .withColumn("ts_ms", lit(nowMs))
-        .withColumn("operation", lit(op))
-        .withColumn("parent", lit(head))
-        // cast: a keyless commit must write a NULL STRING, not VOID —
-        // VOID cannot schema-merge with keyed manifests' STRING
-        .withColumn("commit_key", lit(commitKey.orNull).cast("string"))
-      val base = meta(manifestRows
-        .toDF("file", "stat_col", "stat_min", "stat_max",
-          "stat_min_str", "stat_max_str", "stat_bloom", "stat_bloom_type")
-        .select(col("file"), col("stat_col").cast("string"),
-          col("stat_min").cast("double"), col("stat_max").cast("double"),
-          col("stat_min_str").cast("string"),
-          col("stat_max_str").cast("string"),
-          col("stat_bloom").cast("binary"),
-          col("stat_bloom_type").cast("string")))
+      val carriedEntries = parentFiles(head)
+      val all = carriedEntries ++ files
+      val statRows = all.flatMap(manifestStatRows)
       // bloom rows travel with their files VERBATIM through later
       // commits, copied Spark-side from the parent manifest (a 16 KB
       // sketch per (file, col) must never round-trip the driver on
@@ -665,34 +741,61 @@ object Snapshots {
       // carry the parent's bloom rows for every file still listed.
       // Rewritten files are NOT in `all` under their old paths, so a
       // replaced file's bloom dies with it (the rewrite records fresh
-      // blooms only if asked).
-      val manifest =
-        if (head == 0L) base
+      // blooms only if asked). A carried entry with no recorded bloom
+      // has no bloom row to copy, so the copy runs only when one does;
+      // the copied columns, per file, are the head's (a rollback
+      // carries another version's entries but copies from the head).
+      val carriedBlooms: Map[String, Set[String]] =
+        if (head == 0L ||
+          !carriedEntries.exists(_.bloomColsRecorded.nonEmpty)) Map.empty
         else {
-          val pm = manifestDf(spark, path, head)
-          if (!pm.columns.contains("stat_bloom")) base
-          else {
-            val fileDf = all.map(_.file).toDF("file")
-            val carried = meta(pm
-              .filter(col("stat_bloom").isNotNull)
-              .join(broadcast(fileDf), Seq("file"), "left_semi")
-              .select(col("file"), col("stat_col"),
-                lit(null).cast("double").as("stat_min"),
-                lit(null).cast("double").as("stat_max"),
-                lit(null).cast("string").as("stat_min_str"),
-                lit(null).cast("string").as("stat_max_str"),
-                col("stat_bloom"),
-                col("stat_bloom_type").cast("string")))
-            base.unionByName(carried)
-          }
+          val listed = all.map(_.file).toSet
+          entriesOf(spark, path, head).collect {
+            case e if listed(e.file) && e.bloomColsRecorded.nonEmpty =>
+              e.file -> e.bloomColsRecorded
+          }.toMap
         }
+      // ONE timestamp for every row of this version, in both part
+      // files: history() groups on (version, ts_ms, …) — a per-row
+      // clock read would split one version into two history rows
+      val nowMs = System.currentTimeMillis()
+      val meta = Seq[Any](v, nowMs, op, head, commitKey.orNull)
       val f = fs(spark, path)
       val tmp = new Path(s"$path/$SnapDir/.tmp-v$v-" +
         java.util.UUID.randomUUID().toString.replace("-", "").take(12))
-      manifest.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      if (carriedBlooms.nonEmpty) {
+        import spark.implicits._
+        // a bloom row's layout, as in manifestStatRows, then the meta
+        val carried = Seq(col("file"), col("stat_col"), lit(null),
+          lit(null), lit(null), lit(null), col("stat_bloom"),
+          col("stat_bloom_type")) ++ meta.map(lit)
+        manifestDf(spark, path, head)
+          .filter(col("stat_bloom").isNotNull)
+          .join(broadcast(all.map(_.file).toDF("file")), Seq("file"),
+            "left_semi")
+          .select(carried.zip(ManifestSchema.fields).map { case (c, fd) =>
+            c.cast(fd.dataType).as(fd.name)
+          }: _*)
+          .coalesce(1).write.parquet(tmp.toString)
+      }
+      writeManifestPart(spark.sparkContext.hadoopConfiguration, tmp,
+        statRows.map(_ ++ meta))
       val dest = new Path(s"$path/$SnapDir/v$v")
-      if (claimVersion(spark, tmp, dest)) Some(v)
-      else { f.delete(tmp, true); None }
+      if (claimVersion(spark, tmp, dest)) {
+        // the cold parse of `dest` reads exactly these rows: the stat
+        // rows and, for the parse, one marker per carried bloom row
+        val bloomMarkers = carriedBlooms.toSeq.flatMap { case (file, cs) =>
+          cs.toSeq.map(c => Seq[Any](file, c, null, null, null, null,
+            null, BloomMarker))
+        }
+        // the version is committed whatever happens here: a listing
+        // that fails (another process expired it at once) only skips
+        // the seed
+        try memoPut(memoKey(f, dest),
+          entriesFromRows((statRows ++ bloomMarkers).map(statRowView)))
+        catch { case _: java.io.IOException => () }
+        Some(v)
+      } else { f.delete(tmp, true); None }
       }
     }
     claimed match {
@@ -762,23 +865,43 @@ object Snapshots {
         s"to concurrent committers; last: ${last.getMessage}")
   }
 
-  /** Project a manifest frame to the driver-facing stat shape,
-    * null-filling columns older manifests lack. The bloom BYTES are
-    * deliberately absent — only `stat_bloom_type` rides along, as the
-    * marker of which columns a file has blooms for. */
-  private def statProjection(m: DataFrame): DataFrame = {
-    def c(name: String, tpe: String): Column =
-      if (m.columns.contains(name)) col(name).cast(tpe)
-      else lit(null).cast(tpe)
-    m.select(col("file"), c("stat_col", "string"),
-      c("stat_min", "double"), c("stat_max", "double"),
-      c("stat_min_str", "string"), c("stat_max_str", "string"),
-      c("stat_bloom_type", "string"))
+  /** Project a manifest frame to the driver-facing stat shape. The
+    * bloom BYTES are deliberately absent — only `stat_bloom_type`
+    * rides along, as the marker of which columns a file has blooms
+    * for. */
+  private def statProjection(m: DataFrame): DataFrame =
+    m.select("file", "stat_col", "stat_min", "stat_max",
+      "stat_min_str", "stat_max_str", "stat_bloom_type")
+
+  /** A manifest row's first eight columns ([[ManifestSchema]] order,
+    * up to `stat_bloom_type`) for one entry, as [[commit]] writes them:
+    * one row per numeric stat, string stat and bloom, or one all-null
+    * stat row for a file with none. */
+  private def manifestStatRows(e: FileEntry): Seq[Seq[Any]] = {
+    val rows =
+      e.stats.toSeq.map { case (c, (lo, hi)) =>
+        Seq[Any](e.file, c, lo, hi, null, null, null, null)
+      } ++ e.strStats.toSeq.map { case (c, (lo, hi)) =>
+        Seq[Any](e.file, c, null, null, lo, hi, null, null)
+      } ++ e.blooms.toSeq.map { case (c, (bytes, tpe)) =>
+        Seq[Any](e.file, c, null, null, null, null, bytes, tpe)
+      }
+    if (rows.isEmpty) Seq(Seq[Any](e.file, null, null, null, null, null,
+      null, null))
+    else rows
   }
+
+  /** [[statProjection]]'s view of a [[manifestStatRows]] row. */
+  private def statRowView(r: Seq[Any]): Row =
+    Row(r(0), r(1), r(2), r(3), r(4), r(5), r(7))
+
+  /** Stands in for a carried bloom row's dtype when a commit seeds the
+    * memo: the parse reads only whether a bloom type is present. */
+  private val BloomMarker = "carried"
 
   /** (numeric stats, string stats, bloomed column names) parsed from
     * projected stat rows. */
-  private def parseStatRows(rows: Seq[org.apache.spark.sql.Row])
+  private def parseStatRows(rows: Seq[Row])
       : (Map[String, (Double, Double)], Map[String, (String, String)],
         Set[String]) = {
     val num = rows.flatMap { r =>
@@ -799,6 +922,17 @@ object Snapshots {
     (num, str, bloomed)
   }
 
+  /** One [[FileEntry]] per file of projected stat rows, in file-path
+    * order, without bloom bytes. The one parse behind both a cold
+    * [[entriesOf]] and a commit's memo seed, so the two give equal
+    * entries in the same order. */
+  private def entriesFromRows(rows: Seq[Row]): Seq[FileEntry] =
+    rows.groupBy(_.getString(0)).toSeq.sortBy(_._1).map {
+      case (file, rs) =>
+        val (num, str, bloomed) = parseStatRows(rs)
+        FileEntry(file, num, str, bloomColsRecorded = bloomed)
+    }
+
   /** Parsed-manifest memo. A version's manifest directory is
     * IMMUTABLE once the claim rename lands (the commit protocol's
     * core invariant), so its parsed entries stay valid while the SAME
@@ -811,36 +945,47 @@ object Snapshots {
     * with an FS list — the manifest-resolution cost a resident engine
     * pays once per version, not once per query (the same metadata-
     * memo lifecycle as [[graft.plans.SnapshotPruneRule]]'s
-    * per-(table, version-set) map). Bounded: cleared wholesale past
-    * a size cap (manifests are tiny; the cap is generous). */
+    * per-(table, version-set) map). A commit seeds it with the entries
+    * it just claimed, so an engine that writes a version never parses
+    * it back. Bounded: cleared wholesale past a size cap (manifests
+    * are tiny; the cap is generous). */
   private val entriesMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Long), Seq[FileEntry]]()
   private val EntriesMemoCap = 4096
 
-  private def entriesOf(spark: SparkSession, path: String,
+  private def memoKey(f: FileSystem, dir: Path): (String, Long) =
+    (f.makeQualified(dir).toString, Segments.listingFingerprint(f, dir))
+
+  private def memoPut(key: (String, Long), entries: Seq[FileEntry]): Unit = {
+    if (entriesMemo.size >= EntriesMemoCap) entriesMemo.clear()
+    entriesMemo.put(key, entries)
+  }
+
+  /** Drops every memoised manifest parse (the next [[entriesOf]] of
+    * each version re-reads its manifest). */
+  private[graft] def clearEntriesMemo(): Unit = entriesMemo.clear()
+
+  /** Version `v`'s entries, from [[entriesMemo]] when the directory is
+    * the one memoised (a listing, no job), else parsed from one collect
+    * of its manifest and memoised. Entries come in file-path order and
+    * carry bloom column names, never bloom bytes. */
+  private[graft] def entriesOf(spark: SparkSession, path: String,
       v: Long): Seq[FileEntry] = {
     val dir = new Path(s"$path/$SnapDir/v$v")
     val f = fs(spark, path)
-    val fp =
-      try Segments.listingFingerprint(f, dir)
+    val key =
+      try memoKey(f, dir)
       catch {
         case _: java.io.FileNotFoundException =>
           throw new NoSuchVersionException(
             s"no snapshot v$v at $path (have: " +
               s"${versions(spark, path).mkString(",")})")
       }
-    val key = (f.makeQualified(dir).toString, fp)
     val hit = entriesMemo.get(key)
     if (hit != null) return hit
-    val parsed =
-      statProjection(manifestDf(spark, path, v)).collect().toSeq
-        .groupBy(_.getString(0))
-        .map { case (file, rows) =>
-          val (num, str, bloomed) = parseStatRows(rows)
-          FileEntry(file, num, str, bloomColsRecorded = bloomed)
-        }.toSeq
-    if (entriesMemo.size >= EntriesMemoCap) entriesMemo.clear()
-    entriesMemo.put(key, parsed)
+    val parsed = entriesFromRows(
+      statProjection(manifestDf(spark, path, v)).collect().toSeq)
+    memoPut(key, parsed)
     parsed
   }
 
@@ -1135,9 +1280,7 @@ object Snapshots {
       : Map[String, FileStatRanges] = {
     val vs = versions(spark, path)
     if (vs.isEmpty) return Map.empty
-    val m = allManifests(spark, path, vs)
-    if (!m.columns.contains("stat_col")) return Map.empty
-    statProjection(m)
+    statProjection(allManifests(spark, path, vs))
       .filter(col("stat_col").isNotNull)
       .distinct()
       .collect()
@@ -1149,14 +1292,6 @@ object Snapshots {
       }
   }
 
-  /** Incremental (CDC-style) read: the rows ADDED between `fromV`
-    * (exclusive) and `toV` (inclusive) — exactly the files in `toV`'s
-    * manifest that `fromV`'s lacks. For append-only tables this is
-    * the changelog a downstream consumer tails instead of re-reading
-    * the world: resolving it is a manifest diff (metadata only), and
-    * the read plans only the delta files. An overwrite/compact in the
-    * range fails loudly — its new files are not row-level additions,
-    * and serving them as a delta would double-count rewritten rows. */
   /** The file-level delta of `(fromV, toV]` — the files `toV`'s
     * manifest holds that `fromV`'s lacks, refusing loudly when a
     * rewrite commit sits in the range (its files are not row-level
@@ -1207,7 +1342,16 @@ object Snapshots {
     }
   }
 
-  /** `tolerateCompaction = true` lets the incremental read cross
+  /** Incremental (CDC-style) read: the rows ADDED between `fromV`
+    * (exclusive) and `toV` (inclusive) — exactly the files in `toV`'s
+    * manifest that `fromV`'s lacks. For append-only tables this is
+    * the changelog a downstream consumer tails instead of re-reading
+    * the world: resolving it is a manifest diff (metadata only), and
+    * the read plans only the delta files. An overwrite/compact in the
+    * range fails loudly — its new files are not row-level additions,
+    * and serving them as a delta would double-count rewritten rows.
+    *
+    * `tolerateCompaction = true` lets the incremental read cross
     * row-preserving compact commits (small-file maintenance no longer
     * forces the consumer to stop): appended rows resolve per STEP from
     * each append's own manifest, so a later compact in the range
@@ -1586,6 +1730,22 @@ object Snapshots {
     })
   }
 
+  /** The stat-column UNION of the touched files across BOTH domains,
+    * plus the op's own column — what a scoped rewrite re-records so no
+    * future pruning degrades (the writer re-derives each column's
+    * domain from its dtype). */
+  private def statColUnion(
+      touched: Seq[FileEntry], opCol: String): Seq[String] =
+    (touched.flatMap(e => e.stats.keys ++ e.strStats.keys) :+ opCol)
+      .distinct
+
+  /** The bloom-column UNION of the touched files (names only — the
+    * manifest marker, never the bytes): what a rewrite re-records so
+    * repeated key deletes/lookups stay file-skipping on the rewritten
+    * output instead of degrading one erasure at a time. */
+  private def bloomColUnion(touched: Seq[FileEntry]): Seq[String] =
+    touched.flatMap(_.bloomColsRecorded).distinct
+
   /** SCOPE-PRUNED MERGE: rewrite ONLY the head files whose recorded
     * `scopeCol` stat range can hold one of the updates' scope values;
     * every other file is carried into the new version UNCHANGED (a
@@ -1610,22 +1770,6 @@ object Snapshots {
     * quantity this API exists to keep small. Same conflict posture as
     * every rewrite: derived-from validation + re-derive on a lost
     * race ([[commitRewrite]]). */
-  /** The stat-column UNION of the touched files across BOTH domains,
-    * plus the op's own column — what a scoped rewrite re-records so no
-    * future pruning degrades (the writer re-derives each column's
-    * domain from its dtype). */
-  private def statColUnion(
-      touched: Seq[FileEntry], opCol: String): Seq[String] =
-    (touched.flatMap(e => e.stats.keys ++ e.strStats.keys) :+ opCol)
-      .distinct
-
-  /** The bloom-column UNION of the touched files (names only — the
-    * manifest marker, never the bytes): what a rewrite re-records so
-    * repeated key deletes/lookups stay file-skipping on the rewritten
-    * output instead of degrading one erasure at a time. */
-  private def bloomColUnion(touched: Seq[FileEntry]): Seq[String] =
-    touched.flatMap(_.bloomColsRecorded).distinct
-
   def commitUpsertScoped(
       updates: DataFrame,
       path: String,
@@ -1680,6 +1824,21 @@ object Snapshots {
     })
   }
 
+  /** lit(BigDecimal) is bounded by DecimalType(38): fail HERE with a
+    * usage error, not mid-commit with a Decimal overflow (e.g. a
+    * '1e39' open-ended-max idiom — use a representable max instead).
+    * All three terms matter: total precision ≤ 38 (30 integer + 9
+    * fraction digits is precision 39 and also unrepresentable), scale
+    * ≤ 38, and integer digits ≤ 38 (negative scale from stripped
+    * zeros, e.g. 1e39). */
+  private def checkDecimalBound(b: BigDecimal): Unit = {
+    val norm = b.underlying.stripTrailingZeros
+    require(norm.precision <= 38 && norm.scale <= 38 &&
+        norm.precision - norm.scale <= 38,
+      s"delete bound $b does not fit decimal(38) — " +
+        "use a bound within ±1e38 with at most 38 significant digits")
+  }
+
   /** RANGE-SCOPED DELETE as a COMMIT: remove every row whose
     * `whereCol` falls in `[lo, hi]` by rewriting ONLY the files whose
     * recorded stat range overlaps the deletion range; every other
@@ -1708,21 +1867,6 @@ object Snapshots {
     * travel only once the old manifests are expired, the standard
     * table-format erasure contract. Same conflict posture as every
     * rewrite ([[commitRewrite]]). */
-  /** lit(BigDecimal) is bounded by DecimalType(38): fail HERE with a
-    * usage error, not mid-commit with a Decimal overflow (e.g. a
-    * '1e39' open-ended-max idiom — use a representable max instead).
-    * All three terms matter: total precision ≤ 38 (30 integer + 9
-    * fraction digits is precision 39 and also unrepresentable), scale
-    * ≤ 38, and integer digits ≤ 38 (negative scale from stripped
-    * zeros, e.g. 1e39). */
-  private def checkDecimalBound(b: BigDecimal): Unit = {
-    val norm = b.underlying.stripTrailingZeros
-    require(norm.precision <= 38 && norm.scale <= 38 &&
-        norm.precision - norm.scale <= 38,
-      s"delete bound $b does not fit decimal(38) — " +
-        "use a bound within ±1e38 with at most 38 significant digits")
-  }
-
   def commitDeleteWhere(
       spark: SparkSession, path: String,
       whereCol: String, lo: BigDecimal, hi: BigDecimal): Long = {
@@ -1944,18 +2088,20 @@ object Snapshots {
   /** [[FileEntry]] hit-predicate refined by the bloom verdict at
     * version `v`: a file with a type-matching bloom that rules out
     * EVERY key is excluded; everything else falls back to `mmHits`
-    * (min/max or always-candidate). Bloom-less tables pay only a
-    * manifest SCHEMA check (no collect, no footer read). */
+    * (min/max or always-candidate). A version with no bloom on
+    * `keyCol` pays only the [[entriesOf]] check (no collect, no footer
+    * read). */
   private def bloomRefined(
       spark: SparkSession, path: String, v: Long, keyCol: String,
       probeKeys: DataType => Seq[Column],
       mmHits: FileEntry => Boolean): FileEntry => Boolean = {
-    val pm = manifestDf(spark, path, v)
-    if (!pm.columns.contains("stat_bloom")) return mmHits
+    if (!entriesOf(spark, path, v).exists(_.bloomColsRecorded(keyCol)))
+      return mmHits
     val verdict = columnTypeAt(spark, path, v, keyCol).flatMap { d =>
       val lits = probeKeys(d)
       if (lits.isEmpty) None
-      else bloomSurvivors(spark, pm, keyCol, d, lits)
+      else bloomSurvivors(spark, manifestDf(spark, path, v), keyCol, d,
+        lits)
     }
     verdict match {
       case Some((withBloom, might)) =>
@@ -2095,25 +2241,22 @@ object Snapshots {
     // the one a foreachBatch replay would probe. Refuse unless
     // `force` (intentional teardown of a stopped stream).
     if (drop.nonEmpty && !force) {
-      val m = allManifests(spark, path, vs)
-      if (m.columns.contains("commit_key")) {
-        val newestPerStream = m
-          .filter(col("commit_key").isNotNull)
-          .select("version", "commit_key").distinct().collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-          .groupBy { case (_, k) =>
-            val i = k.lastIndexOf('_'); if (i < 0) k else k.take(i)
-          }
-          .map { case (pfx, rows) => pfx -> rows.map(_._1).max }
-        val lost = newestPerStream.filter { case (_, v) => drop.contains(v) }
-        require(lost.isEmpty,
-          s"expire(keepLast=$keepLast) at $path would drop the NEWEST " +
-            "keyed manifest of stream(s) " +
-            lost.map { case (p, v) => s"$p (v$v)" }.mkString(", ") +
-            " — a replay of that batch would re-apply (exactly-once " +
-            "broken). Raise keepLast above the replay window, or pass " +
-            "force=true for a stopped stream.")
-      }
+      val newestPerStream = allManifests(spark, path, vs)
+        .filter(col("commit_key").isNotNull)
+        .select("version", "commit_key").distinct().collect()
+        .map(r => (r.getLong(0), r.getString(1)))
+        .groupBy { case (_, k) =>
+          val i = k.lastIndexOf('_'); if (i < 0) k else k.take(i)
+        }
+        .map { case (pfx, rows) => pfx -> rows.map(_._1).max }
+      val lost = newestPerStream.filter { case (_, v) => drop.contains(v) }
+      require(lost.isEmpty,
+        s"expire(keepLast=$keepLast) at $path would drop the NEWEST " +
+          "keyed manifest of stream(s) " +
+          lost.map { case (p, v) => s"$p (v$v)" }.mkString(", ") +
+          " — a replay of that batch would re-apply (exactly-once " +
+          "broken). Raise keepLast above the replay window, or pass " +
+          "force=true for a stopped stream.")
     }
     val f = fs(spark, path)
     // referenced batch dirs = parent dirs of every retained file
