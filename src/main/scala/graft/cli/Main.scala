@@ -852,9 +852,11 @@ object Main {
           case "lsh"   => graft.llm.Dedup.compactLshIndex(spark, idx)
           case "bm25"  => graft.llm.Retrieval.compactBm25Index(spark, idx)
           case "dense" => graft.llm.Retrieval.compactDenseIndex(spark, idx)
-          case "ann"   => graft.llm.Quantize.compactPqIndex(spark, idx,
-            targetFiles = arg(args, "--target-files").map(_.toInt)
-              .getOrElse(32))
+          case "ann"   => arg(args, "--target-files").map(_.toInt) match {
+            case Some(n) =>
+              graft.llm.Quantize.compactPqIndex(spark, idx, targetFiles = n)
+            case None => graft.llm.Quantize.compactPqIndex(spark, idx)
+          }
           case other   => sys.error(
             s"index-compact: unknown kind '$other' (lsh | bm25 | ann | dense)")
         }

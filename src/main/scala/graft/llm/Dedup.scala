@@ -722,9 +722,10 @@ object Dedup {
       // counts off this frame in a single aggregate job instead of
       // paying separate count() jobs over incoming and survivors
       // (guide §5 — driver-visible job floor).
-      val refDigests = spark.read.parquet(s"$indexPath/digests")
-        .select(col("digest").as("__graft_digest")).distinct()
-        .withColumn("__graft_hit", lit(true))
+      val refDigests =
+        graft.maintain.Segments.read(spark, s"$indexPath/digests")
+          .select(col("digest").as("__graft_digest")).distinct()
+          .withColumn("__graft_hit", lit(true))
       val flagged = tracked(incoming
         .withColumn("__graft_digest", contentHash(col(textCol)))
         .join(refDigests, Seq("__graft_digest"), "left")
@@ -749,11 +750,12 @@ object Dedup {
       // the boilerplate families the cap exists to excise), excluded
       // from the stored bands by broadcast anti-join. The probe never
       // re-tokenizes, re-hashes or re-counts the reference corpus
-      val oversized = spark.read.parquet(s"$indexPath/bucket_counts")
-        .groupBy("band", "band_hash").agg(sum(col("n")).as("n"))
-        .filter(col("n") > maxBucketSize)
-        .select("band", "band_hash")
-      val refBands = spark.read.parquet(s"$indexPath/bands")
+      val oversized =
+        graft.maintain.Segments.read(spark, s"$indexPath/bucket_counts")
+          .groupBy("band", "band_hash").agg(sum(col("n")).as("n"))
+          .filter(col("n") > maxBucketSize)
+          .select("band", "band_hash")
+      val refBands = graft.maintain.Segments.read(spark, s"$indexPath/bands")
         .join(broadcast(oversized), Seq("band", "band_hash"), "left_anti")
       // candidates are a natural materialization point (the live path
       // counts them too, for its broadcast-verify choice); here the
@@ -772,7 +774,7 @@ object Dedup {
           Seq("band", "band_hash"))
         .select("id_a", "id_b").distinct()
         .localCheckpoint(true)
-      val refSh0 = spark.read.parquet(s"$indexPath/shingles")
+      val refSh0 = graft.maintain.Segments.read(spark, s"$indexPath/shingles")
       // gate the verify-read pushdown on the DISTINCT candidate id
       // count, collected with a cap+1 limit — one job decides AND
       // yields the filter list (the former pair-count gate spent a

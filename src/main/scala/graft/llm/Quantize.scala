@@ -350,7 +350,8 @@ object Quantize {
     val q = typedLit(queryVec.toSeq)
     val sub = queryVec.length / m
     val probed = Similarity.probeLists(
-      Similarity.centroidFrame(embs.sparkSession, cents), q, nprobe)
+      Similarity.centroidFrame(embs.sparkSession, cents,
+        Some(queryVec.toSeq)), col("q_vec"), nprobe)
     val cb = codebook(checked, k, idCol, vecCol)
     // dtab[s][c] = round₆‖q_sub(s) − cb[c]_sub(s)‖² is query-constant:
     // derived ONCE on the one-row codebook frame and broadcast as a
@@ -527,9 +528,7 @@ object Quantize {
       s"no PQ index at $path — writePqIndex first")
     val meta = graft.maintain.Segments.metaRow(spark, path).get
     val m = meta.getAs[Int]("m")
-    val cents: Array[(Long, Seq[Double])] =
-      graft.maintain.Segments.localRows(spark, s"$path/centroids")
-        .get.toArray.map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val cents = storedCentroids(spark, path)
     if (cents.isEmpty) {
       // cold start: the empty index trains on its first batch, with
       // the parameters the index was declared with
@@ -555,20 +554,38 @@ object Quantize {
       s"$path/codes", segId)
   }
 
+  /** The stored coarse quantizer as `(list_id, c_vec)` pairs, through
+    * the [[graft.maintain.Segments.localRows]] memo: nlist rows, empty
+    * on a never-bootstrapped index. */
+  private def storedCentroids(
+      spark: SparkSession, path: String): Array[(Long, Seq[Double])] =
+    graft.maintain.Segments.localRows(spark, s"$path/centroids")
+      .get.toArray.map(r => (r.getLong(0), r.getSeq[Double](1)))
+
   /** Compact an appended index's code table back to the canonical
     * single-segment layout ([[graft.maintain.Segments.replaceTable]] —
-    * crash-safe swap, probes see old-or-new). Code rows cluster by
-    * their coarse list on the way through, so a probe's broadcast
-    * `cid` filter skips whole row groups — the file-pruning layout a
-    * fresh build's assignment scan does not bother to impose but a
-    * compaction pass gets for free. Probe results are unchanged (same
-    * rows, same arithmetic; pinned in QuantizeSpec). */
+    * crash-safe swap, probes see old-or-new), in
+    * [[graft.maintain.Segments.shardCount]] files, as the other index
+    * compactions write. Code rows cluster by their coarse list on the
+    * way through, so a probe's broadcast `cid` filter skips whole row
+    * groups — the file-pruning layout a fresh build's assignment scan
+    * does not bother to impose but a compaction pass gets for free.
+    * Probe results are unchanged (same rows, same arithmetic; pinned
+    * in QuantizeSpec). */
+  def compactPqIndex(spark: SparkSession, path: String): Unit =
+    compactPqCodes(spark, path, graft.maintain.Segments.shardCount)
+
+  /** [[compactPqIndex]] into exactly `targetFiles` files. */
   def compactPqIndex(
-      spark: SparkSession, path: String, targetFiles: Int = 32): Unit = {
+      spark: SparkSession, path: String, targetFiles: Int): Unit =
+    compactPqCodes(spark, path, _ => targetFiles)
+
+  private def compactPqCodes(spark: SparkSession, path: String,
+      files: DataFrame => Int): Unit = {
     require(pqIndexExists(spark, path),
       s"no PQ index at $path — writePqIndex first")
-    graft.maintain.Segments.replaceTable(spark, s"$path/codes")(
-      _.repartitionByRange(targetFiles, col("cid"), col("id"))
+    graft.maintain.Segments.replaceTable(spark, s"$path/codes")(t =>
+      t.repartitionByRange(files(t), col("cid"), col("id"))
         .sortWithinPartitions("cid", "id"))
   }
 
@@ -595,9 +612,13 @@ object Quantize {
   /** The shared indexed ADC scan: probe the stored code table with a
     * float query, optionally filtered to the `nprobe` most
     * query-similar coarse lists. Per probed row the cost is `m` table
-    * lookups; the query↔codebook distance table and the probe list
-    * set broadcast; the only exchange is the bounded
-    * `TakeOrderedAndProject` for the final k. */
+    * lookups. The lists are ranked over the stored centroids as plan
+    * literals ([[storedCentroids]], the memo the append fills;
+    * [[Similarity.centroidFrame]] with the query riding each row), so
+    * no centroid table is scanned; the query↔codebook distance table
+    * and the probe list set broadcast; the only other exchange is the
+    * bounded `TakeOrderedAndProject` for the final k. An empty index
+    * (dim −1, no centroids) returns no rows. */
   private def adcTopKIndexed(
       spark: SparkSession,
       indexPath: String,
@@ -632,14 +653,19 @@ object Quantize {
     val cbLit = readCodebookLiteral(spark, indexPath)
     val dtabDf = spark.range(1).select(
       adcTable(q, cbLit, m, lit(sub)).as("__graft_dtab"))
-    val codes0 = spark.read.parquet(s"$indexPath/codes")
+    val codes0 = graft.maintain.Segments.read(spark, s"$indexPath/codes")
       .filter(col("id") =!= lit(excludeId))
     val codes = nprobe match {
       case Some(np) =>
         require(np >= 1, s"nprobe must be ≥ 1: $np")
-        val probed = Similarity.probeLists(
-          spark.read.parquet(s"$indexPath/centroids"), q, np)
-        codes0.join(broadcast(probed), col("cid") === col("list_id"))
+        val cents = storedCentroids(spark, indexPath)
+        if (cents.isEmpty) codes0.filter(lit(false))
+        else {
+          val probed = Similarity.probeLists(
+            Similarity.centroidFrame(spark, cents, Some(queryVec.toSeq)),
+            col("q_vec"), np)
+          codes0.join(broadcast(probed), col("cid") === col("list_id"))
+        }
       case None => codes0
     }
     codes
@@ -760,9 +786,9 @@ object Quantize {
     val qTabs = qChecked.select(
       col("__graft_qid"), col("__graft_qv"), dtab.as("__graft_dtab"))
     val probeSet = Similarity.probeLists(
-      spark.read.parquet(s"$indexPath/centroids"), qTabs,
+      graft.maintain.Segments.read(spark, s"$indexPath/centroids"), qTabs,
       "__graft_qid", "__graft_qv", nprobe, carry = Seq("__graft_dtab"))
-    val joined = spark.read.parquet(s"$indexPath/codes")
+    val joined = graft.maintain.Segments.read(spark, s"$indexPath/codes")
       .join(broadcast(probeSet), col("cid") === col("list_id"))
     val scored = (if (excludeSelf)
         joined.filter(col("id") =!= col("__graft_qid"))

@@ -336,13 +336,15 @@ object Retrieval {
   /** [[bm25TopK]] against the PERSISTED index: same Lucene-flavored
     * arithmetic, same `(bm25 DESC, id ASC)` output — but tokenize,
     * postings, document frequencies and corpus stats are amortized
-    * into [[writeBm25Index]]; the probe reads the per-segment stats
-    * rows (summed — one row per segment, bounded by appends since the
-    * last [[compactBm25Index]]), the query terms' df rows (summed,
-    * then broadcast), and the query terms' postings through a
-    * pushed-down `token IN` filter on the token-sorted table. The
-    * only exchanges are the |query|-row broadcast and the bounded
-    * `TakeOrderedAndProject`. */
+    * into [[writeBm25Index]]. The probe folds the index's small
+    * tables on the driver: the per-segment stats rows
+    * ([[indexStatsLiterals]]) and the query terms' df ([[queryDf]])
+    * enter the plan as literals, the df as ONE map literal, which
+    * generated code receives as an object, so a fresh query reuses
+    * the compiled classes. The postings scan reads only the terms the
+    * index holds, through a pushed-down `token IN` on the token-sorted
+    * table. The plan is that scan, the per-id aggregate and the
+    * bounded `TakeOrderedAndProject`; no df aggregate, no broadcast. */
   def bm25TopKIndexed(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
@@ -357,14 +359,12 @@ object Retrieval {
     require(bm25IndexExists(spark, indexPath),
       s"no BM25 index at $indexPath — writeBm25Index first")
     val stats = indexStatsLiterals(spark, indexPath)
-    // per-segment df rows for the query terms (pushed token IN keeps
-    // the read at ≤|terms|·segments rows) summed to the global count
-    val dfreq = spark.read.parquet(s"$indexPath/df")
-      .filter(col("token").isin(queryTerms: _*))
-      .groupBy("token").agg(sum(col("df")).as("df"))
-    spark.read.parquet(s"$indexPath/postings")
-      .filter(col("token").isin(queryTerms: _*))
-      .join(broadcast(dfreq), Seq("token"))
+    val dfreq = queryDf(spark, indexPath, queryTerms)
+    graft.maintain.Segments.read(spark, s"$indexPath/postings")
+      .filter(
+        if (dfreq.isEmpty) lit(false)
+        else col("token").isin(dfreq.keys.toSeq: _*))
+      .withColumn("df", element_at(typedLit(dfreq), col("token")))
       .withColumn("n_docs", stats._1)
       .withColumn("avgdl", stats._2)
       .transform(withTermScore(k1, b))
@@ -376,6 +376,21 @@ object Retrieval {
       .orderBy(col("bm25").desc, col(idCol))
       .limit(k)
   }
+
+  /** The query terms' global document frequencies: their per-segment
+    * df rows (≤ |terms|·segments, read through the pushed `token IN`
+    * on the token-sorted table) collected and summed on the driver —
+    * exact long sums, the df counterpart of [[indexStatsLiterals]].
+    * A term the index does not hold has no entry. */
+  private def queryDf(
+      spark: org.apache.spark.sql.SparkSession,
+      indexPath: String,
+      terms: Seq[String]): Map[String, Long] =
+    graft.maintain.Segments.read(spark, s"$indexPath/df")
+      .filter(col("token").isin(terms.distinct: _*))
+      .select("token", "df")
+      .collect()
+      .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
 
   // ---- hybrid retrieval: RRF fusion of BM25 + dense cosine -----------
 
@@ -505,9 +520,10 @@ object Retrieval {
         df => df.filter(col("token").isin(pushable.toIndexedSeq: _*))
       else
         df => df.join(broadcast(terms), Seq("token"), "left_semi")
-    val dfreq = termFilter(spark.read.parquet(s"$indexPath/df"))
+    val dfreq = termFilter(
+        graft.maintain.Segments.read(spark, s"$indexPath/df"))
       .groupBy("token").agg(sum(col("df")).as("df"))
-    termFilter(spark.read.parquet(s"$indexPath/postings"))
+    termFilter(graft.maintain.Segments.read(spark, s"$indexPath/postings"))
       .join(broadcast(dfreq), Seq("token"))
       .withColumn("n_docs", stats._1)
       .withColumn("avgdl", stats._2)
@@ -668,7 +684,7 @@ object Retrieval {
       .get.getAs[Int]("dims")
     val qv = queries.select(col(queryIdCol),
       hashEmbed(col(queryTextCol), dims).as("__graft_q"))
-    spark.read.parquet(s"$indexPath/vectors")
+    graft.maintain.Segments.read(spark, s"$indexPath/vectors")
       .crossJoin(broadcast(qv))
       .select(col(queryIdCol), col("id").as(idCol),
         round(Similarity.cosine(col("v"), col("__graft_q")), 4)

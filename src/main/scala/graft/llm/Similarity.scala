@@ -92,10 +92,13 @@ object Similarity {
   /** IVF probe-list ranking, single-query form: the `nprobe` lists of
     * `cents` (`list_id`, `c_vec`) most similar to the query `q` by
     * round-6 cosine, the lower list id winning ties; returns
-    * `list_id`. `q` is a literal, or a column of a one-row query frame
-    * the caller joined onto `cents`. The ranking runs in-plan on the
-    * nlist-row frame, so the round-6 cosine is the ENGINE's
-    * arithmetic, the same as the oracle's. */
+    * `list_id`. `q` is a column of `cents`: the query column of a
+    * [[centroidFrame]] built with the query, or of a one-row query
+    * frame the caller joined onto `cents`. It must not be a literal,
+    * whose `l2norm` constant-folds into a double that generated code
+    * inlines, so that every fresh query would compile new classes.
+    * The ranking runs in-plan on the nlist-row frame, so the round-6
+    * cosine is the ENGINE's arithmetic, the same as the oracle's. */
   private[llm] def probeLists(
       cents: DataFrame, q: Column, nprobe: Int): DataFrame =
     cents
@@ -140,14 +143,19 @@ object Similarity {
 
   /** Trained coarse centroids as an nlist-row `(list_id, c_vec)` frame
     * of plan literals — what [[probeLists]] ranks and what a persisted
-    * IVF-PQ index stores. */
+    * IVF-PQ index stores. With a `query` vector, every row also carries
+    * it as `q_vec`, the column the single-query [[probeLists]] ranks
+    * against; all of it is one folded array literal, which generated
+    * code receives as an object. */
   private[llm] def centroidFrame(
-      spark: SparkSession, cents: Array[(Long, Seq[Double])]): DataFrame =
+      spark: SparkSession, cents: Array[(Long, Seq[Double])],
+      query: Option[Seq[Double]] = None): DataFrame =
     spark.range(1)
       .select(explode(array(cents.map { case (cid, c) =>
-        struct(lit(cid).as("list_id"), typedlit(c).as("c_vec"))
+        struct(Seq(lit(cid).as("list_id"), typedlit(c).as("c_vec")) ++
+          query.map(typedlit(_).as("q_vec")): _*)
       }: _*)).as("c"))
-      .select(col("c.list_id").as("list_id"), col("c.c_vec").as("c_vec"))
+      .select("c.*")
 
   /** Exact top-k by cosine against a single query vector (given as the
     * one-row DataFrame `query(q_vec)`), excluding `excludeId`. */

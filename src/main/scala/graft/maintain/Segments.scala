@@ -1,6 +1,6 @@
 package graft.maintain
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Segmented table layout for the persisted serving indexes (LSH dedup,
@@ -19,11 +19,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * plain `mode("append")` sink has under replay (duplicated postings
   * double-count BM25 tf; duplicated codes return duplicate ANN ids).
   *
-  * Readers see one logical table: Spark's partition discovery exposes
-  * the segment id as a string `seg` column, which probes simply never
-  * select. Associative statistics (BM25 df/stats, LSH bucket counts)
-  * are stored per segment and SUMMED at probe time — exact integer
-  * addition, so probe results are bit-identical to a merged table.
+  * Readers see one logical table through [[read]]: the data schema
+  * comes from one data file's footer, read on the driver, so planning
+  * a read runs no schema-inference job; Spark's partition discovery
+  * exposes the segment id as a string `seg` column, which probes
+  * simply never select. Associative statistics (BM25 df/stats, LSH
+  * bucket counts) are stored per segment and SUMMED at probe time —
+  * exact integer addition, so probe results are bit-identical to a
+  * merged table.
   * [[replaceTable]] is the compaction arm: it rewrites a
   * many-segment table as a single canonical [[BaseSeg]] under the
   * crash-safe [[Swap]] rename protocol, restoring the exact layout a
@@ -115,7 +118,7 @@ object Segments {
     * replaces. Throws FileNotFoundException when the dir is absent
     * (callers translate that to their "absent" signal). */
   private[maintain] def listingFingerprint(
-      fs: org.apache.hadoop.fs.FileSystem, dir: Path): Long =
+      fs: FileSystem, dir: Path): Long =
     fs.listStatus(dir).foldLeft(1125899906842597L) { (h, s) =>
       var x = h
       x = x * 31 + s.getPath.getName.hashCode
@@ -124,11 +127,12 @@ object Segments {
       x
     }
 
-  /** Collected rows of a small immutable metadata directory
-    * (meta/centroids/codebook — tables rewritten only wholesale with
-    * overwrite mode, never mutated in place), memoized per (qualified
-    * dir, listing fingerprint); None when the dir is absent. Callers
-    * own the "is this table small" judgment — this is for
+  /** Collected rows of a small metadata-class table (meta/centroids/
+    * codebook, rewritten only wholesale with overwrite mode, or a
+    * per-segment stats table), memoized per (qualified dir, listing
+    * fingerprint); None when the dir is absent. A miss is one
+    * [[read]] and its collect: one Spark job, none for the schema.
+    * Callers own the "is this table small" judgment — this is for
     * metadata-class tables bounded by construction. */
   def localRows(spark: SparkSession,
       dir0: String): Option[Seq[org.apache.spark.sql.Row]] = {
@@ -140,10 +144,48 @@ object Segments {
     val key = (fs.makeQualified(dir).toString, fp)
     val hit = rowsMemo.get(key)
     if (hit != null) return Some(hit)
-    val rows = spark.read.parquet(dir.toString).collect().toSeq
+    val rows = read(spark, dir.toString).collect().toSeq
     if (rowsMemo.size >= RowsMemoCap) rowsMemo.clear()
     rowsMemo.put(key, rows)
     Some(rows)
+  }
+
+  /** One index table as a DataFrame, planned without a Spark job: the
+    * data schema is the one stored in ONE data file's footer, read on
+    * the driver ([[Footer.read]] — the row-metadata key schema
+    * inference itself reads), and the `seg` column stays
+    * partition-discovered, as in an inferred read. Every file of an
+    * index table is a Spark write of one derivation, so one footer
+    * speaks for all of them. A directory with no data file falls
+    * through to the inferred read, and so to Spark's own error. */
+  def read(spark: SparkSession, table: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(table)
+    firstDataFile(dir.getFileSystem(conf), dir) match {
+      case Some(f) =>
+        spark.read.schema(Footer.read(conf, f).schema).parquet(table)
+      case None => spark.read.parquet(table)
+    }
+  }
+
+  /** The first data file under `dir` in name order, descending into
+    * partition directories (`seg=<id>`), and skipping the `_`- and
+    * `.`-prefixed names Spark's listing skips (`_SUCCESS`, checksums);
+    * None when `dir` is absent or holds no data file. */
+  private def firstDataFile(fs: FileSystem, dir: Path): Option[Path] = {
+    val entries =
+      try fs.listStatus(dir).toSeq.sortBy(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => return None }
+    def visible(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    entries.find(st => st.isFile && visible(st)).map(_.getPath)
+      .orElse(entries.iterator
+        .filter(st => st.isDirectory && visible(st) &&
+          st.getPath.getName.contains("="))
+        .flatMap(st => firstDataFile(fs, st.getPath))
+        .nextOption())
   }
 
   def metaRow(spark: SparkSession,
@@ -341,7 +383,7 @@ object Segments {
       Swap.recover(fs, p, bak)
       if (fs.exists(tmp) && !fs.delete(tmp, true))
         throw new Swap.SwapFailedException(s"could not clear stale $tmp")
-      val canon = canonical(spark.read.parquet(tablePath).drop("seg"))
+      val canon = canonical(read(spark, tablePath).drop("seg"))
       canon.write.option("parquet.block.size", rowGroupBytes(canon))
         .parquet(s"$tmp/seg=$BaseSeg")
       Swap.replace(fs, p, tmp, bak)

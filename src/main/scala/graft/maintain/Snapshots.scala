@@ -1,7 +1,5 @@
 package graft.maintain
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -130,10 +128,6 @@ object Snapshots {
     StructField("parent", LongType),
     StructField("commit_key", StringType)))
 
-  /** Spark's footer key for the written schema — the one schema
-    * inference itself reads. */
-  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
-
   /** One version's manifest, read with [[ManifestSchema]] (no schema
     * job). */
   private def manifestDf(spark: SparkSession, path: String,
@@ -191,7 +185,7 @@ object Snapshots {
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .withExtraMetaData(
-        java.util.Map.of(SparkRowMetadataKey, ManifestSchema.json))
+        java.util.Map.of(Footer.SparkRowMetadataKey, ManifestSchema.json))
       .build()
     try rows.foreach { r =>
       val g = new SimpleGroup(ManifestParquetType)
@@ -469,29 +463,6 @@ object Snapshots {
     }
   }
 
-  /** What a data file's footer tells the driver: its row count and
-    * the Spark schema the write stored under Spark's row-metadata key
-    * (the same JSON schema inference reads). */
-  private final case class Footer(rows: Long, schema: StructType)
-
-  /** Footers of `files`, read on the driver: a few KB each, no Spark
-    * job. The files must come from a Spark `df.write.parquet`, which
-    * always stores the row-metadata key. */
-  private def batchFooters(spark: SparkSession,
-      files: Seq[Path]): Seq[Footer] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.map { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try {
-        val meta = r.getFooter
-        Footer(meta.getBlocks.asScala.map(_.getRowCount).sum,
-          DataType.fromJson(meta.getFileMetaData.getKeyValueMetaData
-            .get(SparkRowMetadataKey)).asInstanceOf[StructType])
-      } finally r.close()
-    }
-  }
-
   /** Write `df`'s rows as a fresh immutable data batch; returns one
     * [[FileEntry]] per written file. With `statsCols` set, per-file
     * min/max over EVERY listed column are computed in ONE scan of the
@@ -513,7 +484,7 @@ object Snapshots {
     * keep every file (no way to know emptiness for free).
     *
     * The scan's schema and the auto-bloom row count come from the
-    * written files' footers, read on the driver ([[batchFooters]]),
+    * written files' footers, read on the driver ([[Footer.read]]),
     * so neither costs a Spark job. */
   private def writeBatch(df: DataFrame, path: String,
       statsCols: Seq[String] = Seq.empty,
@@ -531,7 +502,8 @@ object Snapshots {
     val paths = files.map(_.getPath.toString)
     if (statsCols.isEmpty && bloomCols.isEmpty) paths.map(FileEntry(_))
     else {
-      val footers = batchFooters(spark, files.map(_.getPath))
+      val conf = spark.sparkContext.hadoopConfiguration
+      val footers = files.map(st => Footer.read(conf, st.getPath))
       // the schema the write stored in its footer is the one
       // inference would read, so the re-read plans without a job
       val reread = spark.read.schema(footers.head.schema).parquet(batch)

@@ -227,7 +227,7 @@ object Incremental {
     val spark = docs.sparkSession
     require(graft.llm.Dedup.lshIndexExists(spark, indexPath),
       s"no LSH index at $indexPath — writeLshIndex first")
-    val refDigests = spark.read.parquet(s"$indexPath/digests")
+    val refDigests = graft.maintain.Segments.read(spark, s"$indexPath/digests")
       .withColumnRenamed("digest", "__digest")
     docs
       .withColumn("__digest", graft.llm.Dedup.contentHash(col("text")))

@@ -1,11 +1,7 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.maintain.Snapshots
@@ -15,62 +11,8 @@ import graft.maintain.Snapshots
   * its own data batch; the manifest costs none: it is written on the
   * driver, and the new head's entries are memoised by the commit
   * itself. The bounds stop bookkeeping jobs from creeping back. */
-class CommitJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CommitJobsSpec extends AnyFunSuite with SparkJobCounting {
   lazy val spark = TestSpark.spark
-
-  /** One started job: its group and its stages' long call sites. */
-  private case class Job(group: String, callSites: Seq[String])
-
-  private val seen = ArrayBuffer.empty[Job]
-  private val listener: SparkListener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      seen.synchronized {
-        seen += Job(
-          Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-            .getOrElse(""),
-          e.stageInfos.map(_.details))
-      }
-  }
-
-  // the session is shared by every suite in the JVM: listen only
-  // while this suite runs
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.addSparkListener(listener)
-  }
-
-  override def afterAll(): Unit =
-    try {
-      spark.sparkContext.removeSparkListener(listener)
-      seen.synchronized(seen.clear())
-    } finally super.afterAll()
-
-  private var markers = 0
-
-  /** Runs a one-task job in a fresh marker group and waits until the
-    * listener has seen it. The bus delivers events in order, so every
-    * earlier job has been seen too. Returns the marker's position. */
-  private def fence(): Int = {
-    markers += 1
-    val g = s"commit-jobs-fence-$markers"
-    val sc = spark.sparkContext
-    sc.setJobGroup(g, g, interruptOnCancel = false)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    def at: Int = seen.synchronized(seen.indexWhere(_.group == g))
-    while (at < 0 && System.nanoTime() < deadline) Thread.sleep(5)
-    assert(at >= 0, s"listener never saw fence job $g")
-    at
-  }
-
-  /** The jobs `body` started: everything between two fences. */
-  private def jobsOf[T](body: => T): (T, Seq[Job]) = {
-    val from = fence()
-    val out = body
-    val to = fence()
-    (out, seen.synchronized(seen.slice(from + 1, to).toSeq))
-  }
 
   /** Frames of a job that reads or writes a manifest: its schema
     * inference, its collect, or a Spark write from [[Snapshots]]'s
@@ -115,10 +57,6 @@ class CommitJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
       comments(from, 4).withColumn("comment", lit("edited"))
         .withColumn("receiveDate", current_timestamp()),
       t, Seq("id"), "receiveDate", "comment")
-
-  private def describe(jobs: Seq[Job]): String =
-    jobs.map(_.callSites.headOption.getOrElse("?").linesIterator
-      .take(3).mkString(" / ")).mkString("\n  ", "\n  ", "")
 
   private def check(name: String, bound: Int, jobs: Seq[Job]): Unit = {
     assert(jobs.size <= bound,
