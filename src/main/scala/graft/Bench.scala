@@ -54,6 +54,16 @@ object Bench {
     "dedup_exact_stats", "dedup_minhash_lsh", "ann_cosine_topk",
     "st_tumbling_hourly")
 
+  /** The x100 spot tier: the headline plus the entries `main` explains
+    * where it runs them. */
+  private[graft] val x100Names: Seq[String] = headline ++ Seq(
+    "j2b_bucketed_3way",
+    "text_hybrid_indexed", "text_hybrid_fully_indexed",
+    "snap_scoped_upsert", "snap_delete_where", "snap_ts_pruned_read",
+    "snap_key_lookup",
+    "snap_change_feed", "st_ann_index_append", "st_bm25_index_append",
+    "st_lsh_index_append", "st_dense_index_append")
+
   /** DuckDB headline twin for queries whose CORRECTNESS oracle is not
     * the engine-comparable implementation. `dedup_minhash_lsh`'s oracle
     * is exact all-pairs Jaccard — the right correctness check (any LSH
@@ -197,7 +207,7 @@ object Bench {
 
   /** Minimal JSON string escape for values interpolated into the
     * hand-built JSON lines (paths can contain quotes/backslashes). */
-  private def jstr(s: String): String =
+  private[graft] def jstr(s: String): String =
     s.flatMap {
       case '"'           => "\\\""
       case '\\'          => "\\\\"
@@ -213,6 +223,18 @@ object Bench {
     java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 
+  /** The DuckDB-comparable SQL of `names` as one JSON object, query →
+    * SQL, the input tools/duckdb_headline.py reads: the [[duckdbTwinSql]]
+    * twin where there is one, else the oracle SQL; a query with neither
+    * is left out. Returns (queries kept, the object). */
+  private[graft] def comparableSqlJson(names: Seq[String]): (Int, String) = {
+    val sqls = names.flatMap(n =>
+      duckdbTwinSql.get(n).orElse(SparkEntry.oracleSql.get(n)).map(n -> _))
+    (sqls.size, sqls
+      .map { case (k, v) => "\"" + jstr(k) + "\":\"" + jstr(v) + "\"" }
+      .mkString("{", ",", "}"))
+  }
+
   /** Same-parquet DuckDB comparison over `dir`: warm seconds for the
     * headline queries' comparable SQL (oracle SQL, or the
     * [[duckdbTwinSql]] twin where the oracle is not the comparable),
@@ -226,11 +248,7 @@ object Bench {
     val none = (-1.0, "{}")
     val tool = new java.io.File("tools/duckdb_headline.py")
     if (!tool.isFile) return none
-    val sqls = names.flatMap(n =>
-      duckdbTwinSql.get(n).orElse(SparkEntry.oracleSql.get(n)).map(n -> _))
-    val json = sqls
-      .map { case (k, v) => "\"" + jstr(k) + "\":\"" + jstr(v) + "\"" }
-      .mkString("{", ",", "}")
+    val (_, json) = comparableSqlJson(names)
     val tmp = java.nio.file.Files.createTempFile("graft_duckdb_headline", ".json")
     try {
       java.nio.file.Files.write(tmp,
@@ -433,6 +451,110 @@ object Bench {
     dir
   }
 
+  private def jmap(kv: Seq[(String, Double)]): String =
+    kv.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
+      .mkString("{", ",", "}")
+
+  /** Sum of the warm times of the queries that did not fail. */
+  private def warmTotal(rs: Seq[(String, Double, Double)]): Double =
+    rs.collect { case (_, _, w) if w >= 0 => w }.sum
+
+  /** One scale tier's readings: (query, cold s, warm s) per query, and
+    * the DuckDB total with its per-query JSON object. */
+  private[graft] final case class Tier(
+      mult: Int, results: Seq[(String, Double, Double)],
+      duckdb: Double, duckdbQueries: String) {
+    /** `null` for a tier that did not run; else mult and the two
+      * totals, plus the two per-query maps when `perQuery`. */
+    def json(perQuery: Boolean): String =
+      if (results.isEmpty) "null"
+      else f"""{"mult":$mult,"spark":${warmTotal(results)}%.4f,""" +
+        f""""duckdb":$duckdb%.4f""" +
+        (if (!perQuery) "}"
+        else s""","queries":${jmap(results.map { case (k, _, w) => (k, w) })},""" +
+          s""""duckdb_queries":$duckdbQueries}""")
+  }
+
+  /** The bench's stdout line. The harvester that reads it keeps only
+    * its last 2,000 characters, so the line carries the fields the
+    * harvester reads plus the tier totals, and per-query times for the
+    * headline set only; the x10 and x100 per-query maps, the cold
+    * times and the rest are in the BENCH_DETAIL.json file at
+    * `detailPath`. All 14 headline queries are DuckDB-comparable now
+    * that the LSH twin exists, so `spark_headline_comparable` is the
+    * full headline total. */
+  private[graft] def stdoutLine(
+      total: Double,
+      headline: Seq[(String, Double, Double)],
+      nQueries: Int,
+      duckdbTotal: Double,
+      duckdbQueries: String,
+      x10: Tier,
+      x100: Tier,
+      loadJson: String,
+      docketsPerSec: Double,
+      gcMs: Long,
+      codecRatios: Map[String, Double],
+      detailPath: String,
+      sfDir: String): String = {
+    val headlineTotal = warmTotal(headline)
+    s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":${jmap(headline.map { case (k, _, w) => (k, w) })},""" +
+      f""""headline_total":$headlineTotal%.4f,"n_queries":$nQueries,""" +
+      f""""duckdb_headline_total":$duckdbTotal%.4f,""" +
+      s""""duckdb_queries":$duckdbQueries,""" +
+      f""""spark_headline_comparable":$headlineTotal%.4f,""" +
+      s""""x10":${x10.json(perQuery = false)},""" +
+      s""""x100_spot":${x100.json(perQuery = false)},""" +
+      s""""load_avg":$loadJson,""" +
+      s""""mode":"warm+cached",""" +
+      f""""dockets_per_sec":$docketsPerSec%.1f,""" +
+      s""""gc_ms":$gcMs,""" +
+      s""""codec_ratios":${jmap(codecRatios.toSeq.sortBy(_._1))},""" +
+      s""""detail":"${jstr(detailPath)}","sf":"${jstr(sfDir)}"}"""
+  }
+
+  /** The bench's session posture. The default is the small-input
+    * tuning for the cached sf tables, which are a few MB: (a) 8 shuffle
+    * partitions is the right-sized parallelism (32 tasks of a few KB
+    * each cost more in scheduling than they buy), (b) AQE's per-stage
+    * re-optimization is pure latency when every shuffle is tiny —
+    * production sessions (GraftSession) keep AQE on for real shuffle
+    * sizes, (c) a 64 MB broadcast threshold lets genuinely-small fact
+    * tables broadcast, (d) a 4 MB `maxPartitionBytes` splits the
+    * single-file tables into several scan partitions, so the cached
+    * relations are parallel, not one block each. `atScale` is the x100
+    * tier's production posture (AQE on, 32 partitions — what
+    * GraftSession ships) over the same broadcast and split sizes.
+    * None of these change results, only scheduling. The split size
+    * must be set AFTER ingest: a 4 MB `maxPartitionBytes` would
+    * schedule one task per tiny JSON file instead of file-packing
+    * ~128 MB per task. */
+  private[graft] def posture(atScale: Boolean = false): Seq[(String, String)] =
+    if (atScale) Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> "32")
+    else Seq(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.autoBroadcastJoinThreshold" -> "67108864",
+      "spark.sql.files.maxPartitionBytes" -> "4194304")
+
+  private[graft] def applyPosture(
+      spark: org.apache.spark.sql.SparkSession,
+      atScale: Boolean = false): Unit =
+    posture(atScale).foreach { case (k, v) => spark.conf.set(k, v) }
+
+  /** Cache + materialize the fixture tables under `dir` (see scaladoc:
+    * the baseline is an in-memory table). Tables.load memoizes the
+    * DataFrame, so every query plan over the same (session, path) hits
+    * this cache. */
+  private[graft] def cacheTables(
+      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    Tables.names.foreach(n => Tables.load(spark, dir, n).cache())
+    Tables.names.foreach(n => Tables.load(spark, dir, n).count())
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
@@ -448,28 +570,8 @@ object Bench {
     val (docketsPerSec, ingestPasses) = ingestDocketsPerSec(spark)
     val codecRatios = measureCodecRatios(spark, sfDir)
 
-    // Small-input tuning, measured with graft.tools.LatencyProbe on
-    // sf0.1: cached tables are a few MB, so (a) 8 shuffle partitions is
-    // the right-sized parallelism (32 tasks of a few KB each cost more
-    // in scheduling than they buy), (b) AQE's per-stage re-optimization
-    // is pure latency when every shuffle is tiny — production sessions
-    // (GraftSession) keep AQE on for real shuffle sizes, (c) a 64 MB
-    // broadcast threshold lets genuinely-small fact tables broadcast.
-    // None of these change results, only scheduling.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "67108864")
-    // Cache + materialize the bench tables (see scaladoc: the baseline
-    // is an in-memory table). Tables.load memoizes the DataFrame, so
-    // every query plan over the same (session, path) hits this cache.
-    // Split single-file tables into multiple scan partitions first so
-    // the cached relations are parallel, not one block each.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4194304")
-    def recacheBaseTables(dir: String): Unit = {
-      Tables.names.foreach(n => Tables.load(spark, dir, n).cache())
-      Tables.names.foreach(n => Tables.load(spark, dir, n).count())
-    }
-    recacheBaseTables(sfDir)
+    applyPosture(spark)
+    cacheTables(spark, sfDir)
 
     // ---- session-cache scoping + load telemetry -----------------------
     // Queries that return lazy frames over persisted intermediates
@@ -497,11 +599,12 @@ object Bench {
 
     // The headline set runs LAST: the first dozen queries of a run pay
     // the JVM's C2 compilation of Spark's shuffle/sort/window internals
-    // regardless of the per-query cold/warm split (measured with
-    // tools/ProbeDecomp: an identical j2 plan times 0.62 s as the first
-    // query of a session and 0.25 s once the JVM is hot). The headline
-    // numbers claim steady-state resident-engine latency, so they are
-    // measured in the steady state the rest of the suite establishes.
+    // regardless of the per-query cold/warm split (measured with the
+    // retired ProbeDecomp main, see SCALE_PROBES.md: an identical j2
+    // plan times 0.62 s as the first query of a session and 0.25 s
+    // once the JVM is hot). The headline numbers claim steady-state
+    // resident-engine latency, so they are measured in the steady
+    // state the rest of the suite establishes.
     val suiteNames = queries.keys.filterNot(headline.contains).toSeq.sorted
 
     val gcStart = gcMs()
@@ -512,7 +615,7 @@ object Bench {
       if (fam != prevFamily) {
         if (prevFamily.nonEmpty) {
           spark.catalog.clearCache()
-          recacheBaseTables(sfDir)
+          cacheTables(spark, sfDir)
         }
         prevFamily = fam
       }
@@ -544,7 +647,7 @@ object Bench {
 
     // Headline tier, base scale: fresh caches, interleaved warm passes.
     spark.catalog.clearCache()
-    recacheBaseTables(sfDir)
+    cacheTables(spark, sfDir)
     val headlineResults = runHeadline(spark, sfDir)
     storagePeak = math.max(storagePeak, storageUsedBytes())
     val results = suiteResults ++ headlineResults
@@ -560,7 +663,7 @@ object Bench {
       else try {
         val dir = ensureScaledFixture(spark, sfDir, scaleMult)
         spark.catalog.clearCache()
-        recacheBaseTables(dir)
+        cacheTables(spark, dir)
         val r = runHeadline(spark, dir)
         spark.catalog.clearCache()
         val (d, dq) = duckdbHeadline(dir, 900)
@@ -570,7 +673,6 @@ object Bench {
           System.err.println(s"[bench] scale tier skipped: ${e.getMessage}")
           (Seq.empty[(String, Double, Double)], -1.0, "{}", "")
       }
-    val x10Spark = x10Results.collect { case (_, _, w) if w >= 0 => w }.sum
 
     // ---- x100 tier: ALL 14 comparables (+ the bucketed j2 twin) at
     // 100× — the per-query-floor story ("a 15 ms query never amortizes
@@ -606,12 +708,6 @@ object Bench {
     // SQL, except st_lsh_index_append, whose oracle is exact all-pairs
     // Jaccard (O(n²) at 10⁷ docs) — it gets the banded twin above,
     // the same treatment dedup_minhash_lsh already has.
-    val x100Names = headline ++ Seq("j2b_bucketed_3way",
-      "text_hybrid_indexed", "text_hybrid_fully_indexed",
-      "snap_scoped_upsert", "snap_delete_where", "snap_ts_pruned_read",
-      "snap_key_lookup",
-      "snap_change_feed", "st_ann_index_append", "st_bm25_index_append",
-      "st_lsh_index_append", "st_dense_index_append")
     val x100Mult = parseMult(sys.env.get("SPARK_GRAFT_X100"), default = 100)
     val (x100Results, x100Duck, x100DuckQueries) =
       if (x100Mult <= 1 || scaleMult <= 1)
@@ -631,9 +727,8 @@ object Bench {
           // GraftSession ships); the finally below restores the suite
           // tuning and clears the x100 caches even when a query dies,
           // so a failure cannot silently re-tune whatever runs next.
-          spark.conf.set("spark.sql.adaptive.enabled", "true")
-          spark.conf.set("spark.sql.shuffle.partitions", "32")
-          recacheBaseTables(dir)
+          applyPosture(spark, atScale = true)
+          cacheTables(spark, dir)
           r = runHeadline(spark, dir, x100Names)
           // 3000 s process budget: the tier gained 5 entries (above)
           // and the tool now bounds any ONE query at 300 s
@@ -648,42 +743,19 @@ object Bench {
             (r, -1.0, "{}")
         } finally {
           spark.catalog.clearCache()
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          spark.conf.set("spark.sql.shuffle.partitions", "8")
+          applyPosture(spark)
         }
       }
-    val x100Spark = x100Results.collect { case (_, _, w) if w >= 0 => w }.sum
     val loadEnd = loadAvg()
 
-    def jmap(kv: Seq[(String, Double)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-        .mkString("{", ",", "}")
-    val ratios = jmap(codecRatios.toSeq.sortBy(_._1))
-    val total = results.collect { case (_, _, w) if w >= 0 => w }.sum
-    val headlineTotal = headlineResults
-      .collect { case (_, _, w) if w >= 0 => w }.sum
-    // all 14 headline queries are DuckDB-comparable now that the LSH
-    // twin exists — `spark_headline_comparable` is the full set
-    val sparkComparable = headlineTotal
-    // Full per-query detail (warm + cold, all queries) goes to a file:
-    // the driver that harvests the stdout line keeps only its last
-    // ~2000 characters, so the line below must stay compact — per-query
-    // times for the headline set only, everything else in the file.
+    val total = warmTotal(results)
+    val x10 = Tier(scaleMult, x10Results, x10Duck, x10DuckQueries)
+    val x100 = Tier(x100Mult, x100Results, x100Duck, x100DuckQueries)
     val detailFile = new java.io.File(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json"))
       .getAbsoluteFile
     val ingestPassesJson = ingestPasses
       .map(p => f"$p%.4f").mkString("[", ",", "]")
-    val x10Json =
-      if (x10Results.isEmpty) "null"
-      else f"""{"mult":$scaleMult,"spark":$x10Spark%.4f,""" +
-        f""""duckdb":$x10Duck%.4f}"""
-    val x100Json =
-      if (x100Results.isEmpty) "null"
-      else f"""{"mult":$x100Mult,"spark":$x100Spark%.4f,""" +
-        f""""duckdb":$x100Duck%.4f,""" +
-        s""""queries":${jmap(x100Results.map { case (k, _, w) => (k, w) })},""" +
-        s""""duckdb_queries":$x100DuckQueries}"""
     val loadJson = f"""[$loadStart%.2f,$loadEnd%.2f]"""
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
@@ -692,38 +764,26 @@ object Bench {
         s""""mode":"warm+cached",""" +
         f""""duckdb_headline_total":$duckdbTotal%.4f,""" +
         s""""duckdb_queries":$duckdbQueries,""" +
-        f""""spark_headline_comparable":$sparkComparable%.4f,""" +
-        s""""x10":$x10Json,""" +
+        f""""spark_headline_comparable":${warmTotal(headlineResults)}%.4f,""" +
+        s""""x10":${x10.json(perQuery = false)},""" +
         s""""x10_queries":${jmap(x10Results.map { case (k, _, w) => (k, w) })},""" +
         s""""x10_queries_cold":${jmap(x10Results.map { case (k, c, _) => (k, c) })},""" +
         s""""x10_duckdb_queries":$x10DuckQueries,""" +
         s""""x10_dir":"${jstr(x10Dir)}",""" +
-        s""""x100_spot":$x100Json,""" +
+        s""""x100_spot":${x100.json(perQuery = true)},""" +
         s""""load_avg":$loadJson,""" +
         f""""dockets_per_sec":$docketsPerSec%.1f,""" +
         s""""ingest_pass_sec":$ingestPassesJson,""" +
         s""""gc_ms":$gcTotalMs,""" +
         s""""storage_bytes_peak":$storagePeak,""" +
         s""""storage_bytes_end":${storageUsedBytes()},""" +
-        s""""codec_ratios":$ratios,"sf":"${jstr(sfDir)}"}"""
+        s""""codec_ratios":${jmap(codecRatios.toSeq.sortBy(_._1))},""" +
+        s""""sf":"${jstr(sfDir)}"}"""
     java.nio.file.Files.write(detailFile.toPath,
       (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val headlineQs = jmap(headlineResults.map { case (k, _, w) => (k, w) })
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""queries":$headlineQs,""" +
-        f""""headline_total":$headlineTotal%.4f,"n_queries":${results.size},""" +
-        f""""duckdb_headline_total":$duckdbTotal%.4f,""" +
-        s""""duckdb_queries":$duckdbQueries,""" +
-        f""""spark_headline_comparable":$sparkComparable%.4f,""" +
-        s""""x10":$x10Json,""" +
-        s""""x100_spot":$x100Json,""" +
-        s""""load_avg":$loadJson,""" +
-        s""""mode":"warm+cached",""" +
-        f""""dockets_per_sec":$docketsPerSec%.1f,""" +
-        s""""gc_ms":$gcTotalMs,""" +
-        s""""codec_ratios":$ratios,""" +
-        s""""detail":"${jstr(detailFile.getPath)}","sf":"${jstr(sfDir)}"}""")
+    println(stdoutLine(total, headlineResults, results.size, duckdbTotal,
+      duckdbQueries, x10, x100, loadJson, docketsPerSec, gcTotalMs,
+      codecRatios, detailFile.getPath, sfDir))
     spark.stop()
   }
 

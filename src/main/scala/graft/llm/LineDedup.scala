@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * pathologically hot line (one banner in billions of docs)
   * concentrates its copies in the probe join's reducer; that is
   * exactly the shape AQE skew-join splitting handles (enabled in
-  * [[graft.GraftSession]], measured in LineSkewProbe /
-  * SCALE_PROBES.md), and the count side is two-phase (line,doc)
+  * [[graft.GraftSession]], measured by the retired LineSkewProbe
+  * main, recorded in SCALE_PROBES.md), and the count side is two-phase (line,doc)
   * partial aggregation so no reducer ever sees more than one row per
   * (line, doc).
   */

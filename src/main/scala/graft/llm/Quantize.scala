@@ -683,9 +683,10 @@ object Quantize {
     * [[writePqIndex]], so the per-query cost is
     * `nprobe/nlist × corpus × m` lookups, the serving cost model.
     *
-    * Serving default (measured — RecallProbe at sf0.1, recorded in
-    * SCALE_PROBES.md): `nprobe = 2` is the COST default; probe cost
-    * tracks the probed fraction (IvfPqScaleProbe) and recall vs the
+    * Serving default (measured by the retired RecallProbe main at
+    * sf0.1, recorded in SCALE_PROBES.md): `nprobe = 2` is the COST
+    * default; probe cost tracks the probed fraction (the retired
+    * IvfPqScaleProbe, same file) and recall vs the
     * full-ADC scan — the only loss nprobe controls — was 0.51 at 2/8
     * and 1.0 at 8/8. Recall-sensitive paths should serve through
     * [[ivfPqTopKReranked]] instead of raising nprobe: on the
@@ -693,9 +694,11 @@ object Quantize {
     * raw-ADC recall@10 at ~0.2 regardless of nprobe or codebook size,
     * while the re-rank recovers 0.65–0.85 (and a returned-vs-true
     * distance ratio ≤1.06) at marginal cost. No fixed nprobe clears a
-    * universal recall floor — the operating point is corpus-dependent;
-    * RecallProbe measures recall + dist_ratio vs nprobe and shortlist
-    * in one run. */
+    * universal recall floor — the operating point is corpus-dependent.
+    * QuantizeSpec pins the planted-duplicate recall through the probe
+    * pruning and the batch ≡ single-query equality; the recorded
+    * recall + dist_ratio sweep over nprobe and shortlist is in
+    * SCALE_PROBES.md. */
   def ivfPqTopKIndexed(
       spark: SparkSession,
       indexPath: String,
@@ -731,10 +734,10 @@ object Quantize {
     * per-run cost is `nprobe/nlist × |codes| × m` table lookups — no
     * float corpus vectors are read at all.
     *
-    * Plan shape: the stored centroid table (nlist rows) ranks each
-    * query's probes in-plan ([[Similarity.probeLists]]' batch form);
-    * each query's m×k ADC distance table is derived ONCE on the
-    * nq-row query frame and rides the broadcast (query, probed list)
+    * Plan shape: the memoised stored centroids (nlist literal rows)
+    * rank each query's probes in-plan ([[Similarity.probeLists]]'
+    * batch form); each query's m×k ADC distance table is derived ONCE
+    * on the nq-row query frame and rides the broadcast (query, probed list)
     * pairs into the stored code table; per-row scoring is `m` array
     * lookups ([[Similarity.adcDist]]); per-query top-k is
     * [[Similarity.perQueryTopK]]'s bounded heap, ascending — ≤ k rows
@@ -785,11 +788,17 @@ object Quantize {
     val dtab = adcTable(col("__graft_qv"), cbLit, m, sub)
     val qTabs = qChecked.select(
       col("__graft_qid"), col("__graft_qv"), dtab.as("__graft_dtab"))
-    val probeSet = Similarity.probeLists(
-      graft.maintain.Segments.read(spark, s"$indexPath/centroids"), qTabs,
-      "__graft_qid", "__graft_qv", nprobe, carry = Seq("__graft_dtab"))
-    val joined = graft.maintain.Segments.read(spark, s"$indexPath/codes")
-      .join(broadcast(probeSet), col("cid") === col("list_id"))
+    // lists rank over the memoised stored centroids, the same source
+    // the single-query probe reads; an empty index (no centroids)
+    // keeps no code row without building a zero-element frame
+    val cents = storedCentroids(spark, indexPath)
+    val codes = graft.maintain.Segments.read(spark, s"$indexPath/codes")
+    val joined =
+      if (cents.isEmpty) codes.crossJoin(qTabs).filter(lit(false))
+      else codes.join(broadcast(Similarity.probeLists(
+        Similarity.centroidFrame(spark, cents), qTabs,
+        "__graft_qid", "__graft_qv", nprobe, carry = Seq("__graft_dtab"))),
+        col("cid") === col("list_id"))
     val scored = (if (excludeSelf)
         joined.filter(col("id") =!= col("__graft_qid"))
       else joined)
@@ -809,7 +818,7 @@ object Quantize {
     * ONLY those ids by true squared-L2 distance against the float
     * table. Final recall@k equals the shortlist's ADC recall@shortlist
     * — quantization error is fully removed, probe-pruning loss is all
-    * that remains (measured in [[graft.tools.RecallProbe]]; recorded
+    * that remains (measured by the retired RecallProbe main, recorded
     * in SCALE_PROBES.md: at sf0.1 the re-rank lifts recall@10 from
     * ~0.2 (quantization-bound raw ADC) to 0.65–0.85 at factor 16,
     * with the returned-vs-true distance ratio dropping 1.2 → ≤1.06;

@@ -33,9 +33,10 @@ import org.apache.spark.sql.functions._
   * reassembly is one doc-keyed aggregate with order restored by
   * position-in-struct sort — the [[LineDedup]] pattern. Never
   * doc×doc; a pathologically hot window (site-wide boilerplate in
-  * half the corpus) is the planted-banner shape LineSkewProbe
-  * records: two-phase (window, doc) partial aggregation on the count
-  * side, AQE skew-split on the probe join.
+  * half the corpus) is the planted-banner shape the retired
+  * LineSkewProbe main recorded in SCALE_PROBES.md: two-phase
+  * (window, doc) partial aggregation on the count side, AQE
+  * skew-split on the probe join.
   */
 object SpanDedup {
 

@@ -141,8 +141,9 @@ object Snapshots {
   }
 
   /** ONE multi-path read over every retained manifest — the same
-    * O(versions)-Spark-jobs trap SnapshotScaleProbe caught in the
-    * replay check applies to any per-version loop. Read with
+    * O(versions)-Spark-jobs trap the retired SnapshotScaleProbe main
+    * caught in the replay check (SCALE_PROBES.md) applies to any
+    * per-version loop. Read with
     * [[ManifestSchema]]: manifests from before a column existed
     * null-fill it, as a merged schema would, without a footer job. */
   private def allManifests(
@@ -638,7 +639,8 @@ object Snapshots {
     * idempotency probe for replayed commits. ONE multi-path read over
     * every retained manifest (tiny files), not a Spark job per
     * version: the per-version loop measured 5 s at 51 retained
-    * versions (SnapshotScaleProbe) where this reads in one job.
+    * versions (the retired SnapshotScaleProbe, SCALE_PROBES.md) where
+    * this reads in one job.
     * Retention must outlast the replay window, stated on
     * [[commitAppend]]. */
   private def versionOfCommitKey(
@@ -2032,7 +2034,8 @@ object Snapshots {
 
   /** `colName`'s dtype at version `v`, from ONE footer — not a
     * mergeSchema pass over every file (~0.3 s of pure planning at 64
-    * files, measured in BloomPruneProbe). For bloom probing any file's
+    * files, measured by the retired BloomPruneProbe, SCALE_PROBES.md).
+    * For bloom probing any file's
     * schema is a sound choice: the dtype only selects WHICH recorded
     * bloom type gets probed, and rows of other types void to no-bloom
     * (candidates). */

@@ -55,7 +55,8 @@ object JoinQueries {
     * no sort order and SHJ skips both sorts; AQE's skew-join splitting
     * still applies.
     *
-    * Hint audited round 14 (J2HintProbe, recorded in SCALE_PROBES.md):
+    * Hint audited round 14 (the retired J2HintProbe main, recorded in
+    * SCALE_PROBES.md):
     * unhinted AQE broadcasts the orders FACT at sf0.1 (0.37 s — fast
     * locally, impossible at 100 TB) and picks SortMergeJoin at x10;
     * at x10 the pinned SHUFFLE_HASH wins every scale-representative
@@ -155,8 +156,8 @@ object JoinQueries {
     * tables pre-bucketed (and sorted) on the join key, so the
     * lineitem⋈orders join plans with NO Exchange on either side — the
     * at-scale answer to j2's recurring 60M+15M-row shuffle (measured:
-    * J2BucketedProbe, 3× faster at the x100 tier after a one-time
-    * 13.7 s layout; SCALE_PROBES.md). The `merge` hint keeps the
+    * the retired J2BucketedProbe main, 3× faster at the x100 tier
+    * after a one-time 13.7 s layout; SCALE_PROBES.md). The `merge` hint keeps the
     * small-SF plan the at-scale shape (a broadcast of a fact table
     * would mask the layout exactly the way j2's scaladoc describes).
     * Shares j2's oracle verbatim — the layout must change the plan,
@@ -168,7 +169,7 @@ object JoinQueries {
       // local[32] sweet spot (2.64 s vs 32-bucket 3.08 s at x100 —
       // the 60M-row side wants ~2 tasks/core of scheduling slack);
       // sizing rule in Bucketing's scaladoc, full per-axis record in
-      // SCALE_PROBES.md (J2bDecompProbe/J2bChampionProbe)
+      // SCALE_PROBES.md (the retired J2bDecompProbe/J2bChampionProbe)
       val (li, ord) = bucketedFacts(s, d, buckets = 64)
       li.join(ord.hint("merge"), col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(Tables.customer(s, d)),

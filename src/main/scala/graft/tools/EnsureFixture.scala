@@ -2,11 +2,11 @@ package graft.tools
 
 import graft.{Bench, GraftSession}
 
-/** Dev diagnostic: materialize the bench's scaled fixture for a
-  * multiplier and exit — so solo probes (SoloX100Probe,
-  * IndexAppendDecompProbe at the x100 dir) can run on a box whose
-  * /tmp was wiped without paying for a ScaleTierProbe headline pass.
-  * Not part of the driver contract.
+/** Materialize the bench's scaled fixture for a multiplier and exit,
+  * so `graft.tools.Probe` can run on the x10/x100 dir of a box whose
+  * /tmp was wiped without paying for a full `graft.Bench` run. The
+  * dir it prints is Probe's DIR argument. Not part of the bench
+  * contract.
   *
   * Run: PROBE_MULT=100 sbt "runMain graft.tools.EnsureFixture"
   */

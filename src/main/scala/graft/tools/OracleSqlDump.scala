@@ -7,28 +7,12 @@ package graft.tools
   * Usage: runMain graft.tools.OracleSqlDump <outFile> <q1,q2,…>
   */
 object OracleSqlDump {
-  private def jstr(s: String): String =
-    s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case '\n'         => "\\n"
-      case '\r'         => "\\r"
-      case '\t'         => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    }
-
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: OracleSqlDump <outFile> <q1,q2,...>")
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val sqls = names.flatMap(n =>
-      graft.Bench.duckdbTwinSql.get(n)
-        .orElse(graft.SparkEntry.oracleSql.get(n)).map(n -> _))
-    val json = sqls
-      .map { case (k, v) => "\"" + jstr(k) + "\":\"" + jstr(v) + "\"" }
-      .mkString("{", ",", "}")
+    val (n, json) = graft.Bench.comparableSqlJson(
+      args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     java.nio.file.Files.write(java.nio.file.Paths.get(args(0)),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[oraclesqldump] wrote ${args(0)} (${sqls.length} queries)")
+    println(s"[oraclesqldump] wrote ${args(0)} ($n queries)")
   }
 }

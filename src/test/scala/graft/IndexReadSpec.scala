@@ -175,5 +175,9 @@ class IndexReadSpec extends AnyFunSuite {
     assert(probe.schema.map(f => f.name -> f.dataType) == Seq(
       "vec_id" -> LongType, "adc_dist" -> DoubleType))
     assert(Quantize.pqTopKIndexed(spark, idx, q).isEmpty)
+    val batch = Quantize.ivfPqKnnJoinIndexed(spark, idx,
+      Seq((1L, q.toSeq)).toDF("q_id", "q_vec"))
+    assert(batch.isEmpty)
+    assert(batch.columns.toSeq == Seq("q_id", "vec_id", "adc_dist", "rank"))
   }
 }
